@@ -15,9 +15,11 @@ Spark-first differences from the reference:
   ``file://``, ``s3a://``, no subprocess parsing, and LISTSTATUS-like
   structured output instead of raw ``-ls`` text.
 * The SQL endpoint reuses the engine's guarded serving path
-  (``guards.run_with_repair``: clean -> lint -> execute), SELECT-only,
-  with a hard row cap — the reference exposes Hive through the same
-  "query in, rows out" shape.
+  (``guards.run_with_repair``: clean -> lint -> pure-query check ->
+  execute), with a hard row cap — the reference exposes Hive through
+  the same "query in, rows out" shape. The pure-query policy lives in
+  :mod:`guards`, not here: this module only maps its refusal to 400
+  and an unavailable guard to 503.
 * Implementation is stdlib ``http.server`` (this container ships no
   FastAPI); ``ThreadingHTTPServer`` because Spark sessions are
   thread-safe for concurrent read queries.
@@ -36,7 +38,6 @@ import datetime
 import decimal
 import json
 import posixpath
-import re
 import threading
 from collections.abc import Sequence
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -51,7 +52,10 @@ from hadoop_data_pipeline_spark.fs import FS
 #: result endpoint, not an export path).
 MAX_SQL_ROWS = 1000
 
-_SELECT_RE = re.compile(r"^\s*(select|with)\b", re.IGNORECASE)
+#: Request bodies above this are refused with 413 before any byte is
+#: read: uploads are control-plane files, not datasets (stream those
+#: with the DataFrame writers).
+MAX_UPLOAD_BYTES = 64 * 1024 * 1024
 
 
 def _json_default(obj: object) -> str:
@@ -112,8 +116,15 @@ class _Handler(BaseHTTPRequestHandler):
     def _route(self) -> str:
         return urlparse(self.path).path
 
-    def _body(self) -> bytes:
+    def _body(self) -> bytes | None:
         n = int(self.headers.get("Content-Length") or 0)
+        if n > MAX_UPLOAD_BYTES:
+            self._error(
+                413,
+                f"request body exceeds {MAX_UPLOAD_BYTES} bytes; bulk "
+                "data belongs to the distributed writers",
+            )
+            return None
         return self.rfile.read(n) if n else b""
 
     def log_message(self, fmt, *args):  # quiet by default
@@ -185,7 +196,10 @@ class _Handler(BaseHTTPRequestHandler):
                 p = self._need_path()
                 if p is None:
                     return
-                self.fs.write_bytes(p, self._body())
+                body = self._body()
+                if body is None:
+                    return
+                self.fs.write_bytes(p, body)
                 self._json(200, {"message": "Upload successful", "path": p})
             elif route == "/fs/mkdirs":
                 p = self._need_path()
@@ -200,36 +214,25 @@ class _Handler(BaseHTTPRequestHandler):
                 self.fs.touch(p)
                 self._json(200, {"message": "Touched", "path": p})
             elif route == "/sql":
-                raw = self._body().decode("utf-8", errors="replace")
+                body = self._body()
+                if body is None:
+                    return
+                raw = body.decode("utf-8", errors="replace")
                 try:
                     sql = json.loads(raw).get("sql", "")
                 except (json.JSONDecodeError, AttributeError):
                     sql = raw  # raw-text body is accepted too
-                cleaned = guards.clean_sql(sql or "")
-                if not _SELECT_RE.match(cleaned):
-                    self._error(400, "only SELECT/WITH statements are served")
-                    return
-                # The prefix check alone is bypassable (a CTE can
-                # front DML), so the real decision is the parsed-plan
-                # walk: any write/DDL/command node anywhere in the
-                # tree refuses the statement (guards.non_query_nodes).
-                # If the guard itself cannot run (no classic JVM
-                # parser, py4j failure) it raises rather than
-                # answering "pure query" — map that to 503, never
-                # execute unguarded (r15 ADVICE: fail closed).
+                # guards.run_with_repair owns the pure-query policy;
+                # a guard that cannot run must never mean "execute
+                # unguarded" (fail closed: 503).
                 try:
-                    bad = guards.non_query_nodes(self.spark, cleaned)
+                    df, final_sql = guards.run_with_repair(self.spark, sql or "")
+                except guards.NonQueryError as exc:
+                    self._error(400, str(exc))
+                    return
                 except guards.GuardUnavailableError as exc:
                     self._error(503, str(exc))
                     return
-                if bad:
-                    self._error(
-                        400,
-                        "only pure queries are served; statement "
-                        f"contains {', '.join(bad)}",
-                    )
-                    return
-                df, final_sql = guards.run_with_repair(self.spark, sql)
                 rows = df.limit(MAX_SQL_ROWS).collect()
                 self._json(
                     200,

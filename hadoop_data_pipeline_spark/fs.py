@@ -44,18 +44,21 @@ class FS:
     def exists(self, p: str) -> bool:
         return bool(self._fs(p).exists(self._path(p)))
 
-    def list_files(self, p: str, recursive: bool = True) -> list[str]:
-        """Recursive listing (S5). Missing path -> [] (reference
-        ``jobs/utils/hdfs.py:15-26`` behavior)."""
+    def _statuses(self, p: str, recursive: bool):
+        """``LocatedFileStatus`` stream under ``p``; a missing path
+        yields nothing (reference ``jobs/utils/hdfs.py:15-26``
+        behavior)."""
         fs = self._fs(p)
         path = self._path(p)
         if not fs.exists(path):
-            return []
-        out: list[str] = []
+            return
         it = fs.listFiles(path, recursive)
         while it.hasNext():
-            out.append(it.next().getPath().toString())
-        return out
+            yield it.next()
+
+    def list_files(self, p: str, recursive: bool = True) -> list[str]:
+        """Recursive listing (S5). Missing path -> []."""
+        return [st.getPath().toString() for st in self._statuses(p, recursive)]
 
     def list_file_sizes(
         self, p: str, recursive: bool = True
@@ -66,16 +69,10 @@ class FS:
         stream as :meth:`list_files`, so it works on ``hdfs://``,
         ``s3a://`` etc. with one RPC batch per listing page). Missing
         path -> []."""
-        fs = self._fs(p)
-        path = self._path(p)
-        if not fs.exists(path):
-            return []
-        out: list[tuple[str, int]] = []
-        it = fs.listFiles(path, recursive)
-        while it.hasNext():
-            st = it.next()
-            out.append((st.getPath().toString(), int(st.getLen())))
-        return out
+        return [
+            (st.getPath().toString(), int(st.getLen()))
+            for st in self._statuses(p, recursive)
+        ]
 
     def touch(self, p: str) -> None:
         """Create an empty marker file (K5)."""
@@ -114,14 +111,11 @@ class FS:
             return None
         stream = fs.open(path)
         try:
-            chunks: list[bytes] = []
-            buf_cls = self._jvm.java.io.ByteArrayOutputStream
-            bos = buf_cls()
+            bos = self._jvm.java.io.ByteArrayOutputStream()
             self._jvm.org.apache.hadoop.io.IOUtils.copyBytes(
                 stream, bos, 65536, False
             )
-            chunks.append(bytes(bos.toByteArray()))
-            return b"".join(chunks).decode("utf-8")
+            return bytes(bos.toByteArray()).decode("utf-8")
         finally:
             stream.close()
 

@@ -17,6 +17,15 @@ Behavioral parity with the reference's dashboard service
   fixer (an LLM in production, a stub in tests) to repair the
   statement on error, bounded attempts.
 
+This module is the one place that decides which SQL may execute: every
+statement ``run_with_repair`` is about to run — the first one and each
+one a fixer returns — must pass the pure-query policy (a
+``^SELECT|WITH`` prefix and no write/DDL/command node anywhere in the
+parsed plan, :func:`non_query_nodes`) or it is refused with
+:class:`NonQueryError` and never reaches ``spark.sql``. Both serving
+paths (the ``/sql`` HTTP route and the LLM ask path) go through it and
+carry no guard code of their own.
+
 Beyond the reference: ``plan_has_bad_remaining_sum`` re-checks the
 rule on Spark's **parsed logical plan**, catching variants the string
 regex cannot (subqueries, formatting, CTE indirection) — a pre-analysis
@@ -115,6 +124,10 @@ _NON_QUERY_NODE_RE = re.compile(
     r"|Command$|Statement$"
 )
 
+#: Leading-keyword half of the pure-query policy: cheap, but a CTE can
+#: front DML, so :func:`non_query_nodes` makes the real decision.
+_SELECT_RE = re.compile(r"^\s*(select|with)\b", re.IGNORECASE)
+
 
 class GuardUnavailableError(RuntimeError):
     """The parsed-plan write guard could not inspect the statement
@@ -160,8 +173,8 @@ def non_query_nodes(spark: SparkSession, sql: str) -> list[str]:
     a session with no ``_jsparkSession``, a py4j transport error)
     means the guard could not inspect a statement that ``spark.sql``
     may still happily execute, so it FAILS CLOSED by raising
-    :class:`GuardUnavailableError`; callers must refuse to execute
-    (the HTTP handler returns 503 instead of running the statement).
+    :class:`GuardUnavailableError`; :func:`run_with_repair` lets it
+    propagate without executing (the HTTP handler answers 503).
     Walks ``children`` and ``innerChildren`` so CTE definitions and
     subqueries are covered; parsed trees are shallow (no driver-side
     blowup), and parsing — unlike ``spark.sql`` — never runs commands
@@ -193,31 +206,54 @@ def non_query_nodes(spark: SparkSession, sql: str) -> list[str]:
     return seen
 
 
+class NonQueryError(ValueError):
+    """The statement is not a pure query (wrong leading keyword, or a
+    write / DDL / command node in its parsed plan); it was not
+    executed. The HTTP façade answers it with 400."""
+
+
+def _require_pure_query(spark: SparkSession, sql: str) -> None:
+    """Refuse ``sql`` unless it is a pure query;
+    :class:`GuardUnavailableError` from the plan walk propagates so
+    callers fail closed."""
+    if not _SELECT_RE.match(sql):
+        raise NonQueryError("only SELECT/WITH statements are served")
+    bad = non_query_nodes(spark, sql)
+    if bad:
+        raise NonQueryError(
+            f"only pure queries are served; statement contains {', '.join(bad)}"
+        )
+
+
 def run_with_repair(
     spark: SparkSession,
     sql: str,
     fixer: Callable[[str, str], str] | None = None,
     max_attempts: int = 3,
-    lint_plan: bool = True,
 ) -> tuple[DataFrame, str]:
     """Execute ``sql`` with the guard + repair loop (reference
     ``chat_with_data_full``): clean, lint (pre-emptive repair with
     :data:`REPAIR_HINT` if prohibited — the regex catches the CASE
-    form, the analyzed-plan walk catches the rest), run, and on
-    execution error ask ``fixer(sql, error)`` for a corrected
-    statement, <= ``max_attempts`` total executions. Returns
-    (DataFrame, final SQL)."""
+    form, the parsed-plan walk catches the rest), refuse anything that
+    is not a pure query, run, and on a refusal or execution error ask
+    ``fixer(sql, error)`` for a corrected statement, <= ``max_attempts``
+    total attempts. Without a fixer the first error is raised. A
+    :class:`GuardUnavailableError` always propagates at once: nothing
+    executes and the fixer is not asked. Returns (DataFrame, final
+    SQL)."""
     sql = clean_sql(sql)
     if fixer is not None and (
-        has_bad_remaining_sum(sql)
-        or (lint_plan and plan_has_bad_remaining_sum(spark, sql))
+        has_bad_remaining_sum(sql) or plan_has_bad_remaining_sum(spark, sql)
     ):
         sql = clean_sql(fixer(sql, REPAIR_HINT))
     last_error: Exception | None = None
     for _ in range(max_attempts):
         try:
+            _require_pure_query(spark, sql)
             return spark.sql(sql), sql
-        except Exception as e:  # noqa: BLE001 - any analysis/exec error
+        except GuardUnavailableError:
+            raise
+        except Exception as e:  # noqa: BLE001 - refusal or analysis/exec error
             last_error = e
             if fixer is None:
                 break

@@ -65,7 +65,9 @@ def answer_question(
     year_context: str = "",
     max_attempts: int = 3,
 ) -> tuple[DataFrame, str]:
-    """L1+L2+L3: translate, lint, execute with LLM repair loop."""
+    """L1+L2+L3: translate, then lint, refuse anything but a pure
+    query, and execute with the LLM repair loop
+    (:func:`guards.run_with_repair`)."""
     schema = schema_prompt(spark, tables)
     sql = nl_to_sql(client, question, schema, year_context)
 

@@ -60,8 +60,6 @@ def read_csv(
         reader = reader.schema(schema)
     else:
         reader = reader.option("inferSchema", "true")
-    if isinstance(paths, list):
-        return reader.csv(paths)
     return reader.csv(paths)
 
 

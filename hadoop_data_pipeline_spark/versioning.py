@@ -122,24 +122,22 @@ class Versioner:
         year: int,
         target_path: str,
         partition_col: str = "year",
-        verify_checksum: bool = True,
     ) -> DataFrame:
         """Read a snapshot and atomically swap it into the target
-        table's partition. Verifies the content hash against the
+        table's partition. Always verifies the content hash against the
         manifest first (the reference cannot — its checksum is not
         reproducible)."""
         vdir = self._version_dir(year, version_id)
         df = self.spark.read.parquet(vdir)
-        if verify_checksum:
-            manifest_text = self.fs.read_text(f"{vdir}/_version.json")
-            if manifest_text:
-                manifest = json.loads(manifest_text)
-                actual = content_checksum(df)
-                if actual != manifest["checksum"]:
-                    raise RuntimeError(
-                        f"checksum mismatch restoring {version_id}: "
-                        f"manifest={manifest['checksum']} actual={actual}"
-                    )
+        manifest_text = self.fs.read_text(f"{vdir}/_version.json")
+        if manifest_text:
+            manifest = json.loads(manifest_text)
+            actual = content_checksum(df)
+            if actual != manifest["checksum"]:
+                raise RuntimeError(
+                    f"checksum mismatch restoring {version_id}: "
+                    f"manifest={manifest['checksum']} actual={actual}"
+                )
         atomic_write_partition(df, target_path, partition_col, year)
         return df
 

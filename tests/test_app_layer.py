@@ -9,7 +9,7 @@ import logging
 
 import pytest
 
-from hadoop_data_pipeline_spark import api, ingestion, llm_ops
+from hadoop_data_pipeline_spark import ingestion, llm_ops
 from hadoop_data_pipeline_spark.alerts import Alerter
 from hadoop_data_pipeline_spark.fs import repair_table_partitions
 from hadoop_data_pipeline_spark.history import ChatHistory
@@ -149,51 +149,3 @@ def test_translate_headers_passthrough_unknown():
         lambda s, u: '{"ว/ด/ป": "month"}', ["ว/ด/ป", "already_english"]
     )
     assert mapping == {"ว/ด/ป": "month", "already_english": "already_english"}
-
-
-def test_fs_rest_facade_roundtrip(spark, tmp_path):
-    # S9 parity: list / upload / delete over HTTP against the FS seam
-    # (reference serves the same three verbs over its hdfs CLI).
-    import urllib.request
-
-    from hadoop_data_pipeline_spark.fs import FS
-
-    server, base = api.serve_in_background(FS(spark))
-    try:
-        root = tmp_path.as_posix()
-
-        def call(method, url, data=None):
-            req = urllib.request.Request(base + url, data=data, method=method)
-            with urllib.request.urlopen(req) as resp:
-                return resp.status, json.loads(resp.read())
-
-        # upload two files
-        for name in ("a.txt", "sub%2Fb.txt"):
-            status, body = call(
-                "POST", f"/fs/upload?path={root}/{name}", data=b"hello"
-            )
-            assert status == 200 and body["bytes"] == 5
-
-        status, body = call("GET", f"/fs/list?path={root}")
-        assert status == 200
-        assert sorted(f.rsplit("/", 1)[-1] for f in body["files"]) == [
-            "a.txt",
-            "b.txt",
-        ]
-
-        status, body = call("DELETE", f"/fs/delete?path={root}/a.txt")
-        assert status == 200 and body["deleted"] is True
-        status, body = call("GET", f"/fs/exists?path={root}/a.txt")
-        assert status == 200 and body["exists"] is False
-
-        # contract errors: missing param -> 400, bad endpoint -> 404
-        import urllib.error
-
-        with pytest.raises(urllib.error.HTTPError) as e:
-            call("GET", "/fs/list")
-        assert e.value.code == 400
-        with pytest.raises(urllib.error.HTTPError) as e:
-            call("GET", f"/fs/nope?path={root}")
-        assert e.value.code == 404
-    finally:
-        server.shutdown()

@@ -115,6 +115,35 @@ def test_sql_write_statements_refused_behind_cte(server):
     assert out["rows"] == [[3]]
 
 
+def test_sql_runs_parsed_plan_walk_once(server, monkeypatch):
+    """One /sql request parses its statement for the write guard once."""
+    from hadoop_data_pipeline_spark import guards
+
+    base, _ = server
+    calls = []
+    walk = guards.non_query_nodes
+    monkeypatch.setattr(
+        guards, "non_query_nodes", lambda *a: calls.append(a) or walk(*a)
+    )
+    out = _req(f"{base}/sql", "POST", b"SELECT COUNT(*) AS n FROM api_rows")
+    assert out["rows"] == [[3]]
+    assert len(calls) == 1
+
+
+def test_body_over_cap_refused_before_read(server, monkeypatch):
+    """A body over MAX_UPLOAD_BYTES gets 413 and nothing is written."""
+    from hadoop_data_pipeline_spark.app import http_api
+
+    base, root = server
+    monkeypatch.setattr(http_api, "MAX_UPLOAD_BYTES", 4)
+    target = f"file://{root}/too_big.txt"
+    code, detail = _err(f"{base}/fs/upload?path={target}", "POST", b"12345")
+    assert code == 413 and "exceeds 4 bytes" in detail["detail"]
+    assert _req(f"{base}/fs/status?path={target}")["exists"] is False
+    code, _ = _err(f"{base}/sql", "POST", b"SELECT 1")
+    assert code == 413
+
+
 def test_sql_serializes_dates_decimals_binary(server):
     """Date / timestamp / decimal / binary columns must serialize, not
     500 (the fixture schema has date columns — ADVICE r14 #2)."""

@@ -3,7 +3,9 @@ LLM-op seams (L1-L5) with stub clients."""
 
 from __future__ import annotations
 
-from hadoop_data_pipeline_spark import ingestion, llm_ops
+import pytest
+
+from hadoop_data_pipeline_spark import guards, ingestion, llm_ops
 
 # ---------------------------------------------------------------------------
 # Grid normalization
@@ -138,6 +140,25 @@ def test_answer_question_repairs_on_error(spark):
     df, _ = llm_ops.answer_question(spark, client, "count rows", ["finance_long"])
     assert df.collect()[0]["n"] == 2
     assert len(calls) == 2
+
+
+def test_answer_question_refuses_dml_behind_cte(spark, tmp_path):
+    """The ask path runs the same pure-query guard as /sql: LLM-emitted
+    DML fronted by a CTE is refused and the target table is untouched."""
+    spark.sql(
+        "CREATE TABLE llm_victim (x int) USING parquet "
+        f"LOCATION '{tmp_path / 'victim'}'"
+    )
+    try:
+        spark.sql("INSERT INTO llm_victim VALUES (1)")
+        dml = "WITH t AS (SELECT 99 AS x) INSERT INTO llm_victim SELECT * FROM t"
+        with pytest.raises(guards.NonQueryError, match="InsertIntoStatement"):
+            llm_ops.answer_question(
+                spark, lambda system, user: dml, "add a row", ["llm_victim"]
+            )
+        assert [r.x for r in spark.table("llm_victim").collect()] == [1]
+    finally:
+        spark.sql("DROP TABLE IF EXISTS llm_victim")
 
 
 def test_summarize_translates_categories(spark):

@@ -187,6 +187,44 @@ def test_run_with_repair_plan_lint_preemptive(spark, long_view):
     assert calls and "point-in-time" in calls[0]
 
 
+def test_run_with_repair_refuses_dml_from_fixer(spark, long_view, tmp_path):
+    """A fixer that "repairs" a failing SELECT into DML behind a CTE is
+    refused like an execution error, within the same max_attempts, and
+    the DML never runs."""
+    out = tmp_path / "fixer_dml"
+    dml = (f"WITH t AS (SELECT 1 AS x) INSERT OVERWRITE DIRECTORY '{out}' "
+           "USING parquet SELECT * FROM t")
+    errors = []
+
+    def fixer(sql, error):
+        errors.append(error)
+        return dml
+
+    with pytest.raises(guards.NonQueryError, match="InsertIntoDir"):
+        guards.run_with_repair(
+            spark, "SELECT * FROM missing", fixer=fixer, max_attempts=3
+        )
+    assert len(errors) == 3
+    assert "InsertIntoDir" in errors[1]
+    assert not out.exists()
+
+
+def test_run_with_repair_guard_unavailable_skips_fixer(spark, monkeypatch):
+    """An unavailable guard propagates at once: no execution, no fixer."""
+    monkeypatch.setattr(
+        guards, "non_query_nodes",
+        lambda *_a: (_ for _ in ()).throw(
+            guards.GuardUnavailableError("parser unreachable")),
+    )
+    calls = []
+    monkeypatch.setattr(spark, "sql", lambda *a: calls.append(("sql", a)))
+    with pytest.raises(guards.GuardUnavailableError):
+        guards.run_with_repair(
+            spark, "SELECT 1", fixer=lambda s, e: calls.append(("fix", s)) or s
+        )
+    assert calls == []
+
+
 def test_non_query_nodes_pure_queries_pass(spark):
     for sql in (
         "SELECT 1",
@@ -257,7 +295,7 @@ def test_http_sql_503_when_guard_unavailable(spark, monkeypatch):
             gmod.GuardUnavailableError("parser unreachable")),
     )
     monkeypatch.setattr(
-        gmod, "run_with_repair",
+        spark, "sql",
         lambda *a, **k: executed.append(a) or (_ for _ in ()).throw(
             AssertionError("must not execute")),
     )
