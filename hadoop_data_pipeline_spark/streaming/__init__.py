@@ -14,4 +14,14 @@ Spark-native upgrade path:
   watermarks; the SAME functions run on batch DataFrames (oracle-
   checked in the catalog) and streaming DataFrames.
 * ``stateful`` — custom per-key state via ``applyInPandasWithState``.
+* ``commitlog`` — manifest-last commit across a sink's store
+  directories (exactly-once appends across crashes).
+* ``sink`` — the one micro-batch runner and the state helpers every
+  sink shares.
+* ``maintenance`` — between-ticks compaction of a sink's stores.
+* ``dedup_sink`` — exact (digest) dedup into a clean zone.
+* ``neardup_sink`` — MinHash-LSH near-dup dedup against a band index.
+* ``prep_sink`` — quality gate + exact + near-dup training-data prep.
+* ``embed_sink`` — semantic dedup of embeddings into a vector store.
+* ``media_sink`` — decimation + shared-scene dedup of media clips.
 """

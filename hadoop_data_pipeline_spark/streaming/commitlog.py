@@ -17,7 +17,8 @@ The protocol (same family as the repo's 2-phase-commit
    file listing of every store into ``pending-{batch_id}.json``
    (written tmp-fsync-rename, so the intent record itself is atomic
    AND durable). Nothing has been mutated yet.
-2. the sink runs its appends — any number, any order;
+2. the sink runs its appends — any number, any order
+   (``commit_appends`` wraps steps 1-3 around a list of appends);
 3. ``commit(batch_id)`` — write the ``commit-{batch_id}.json``
    marker (again tmp-fsync-rename: the RENAME is the commit point),
    then drop the pending record and release the writer lock.
@@ -103,6 +104,8 @@ import json
 import os
 import socket
 import time
+from collections.abc import Callable, Sequence
+from contextlib import contextmanager
 
 
 class ConcurrentWriterError(RuntimeError):
@@ -409,8 +412,6 @@ class BatchCommitLog:
         displacement detected at release is chained onto it as the
         ``__cause__`` rather than replacing it (the primary failure is
         what the operator must see first; the displacement is context)."""
-        from contextlib import contextmanager
-
         if self._lock_held:
             raise ConcurrentWriterError(
                 f"commit log {self.log_dir}: exclusive() called while "
@@ -589,6 +590,21 @@ class BatchCommitLog:
             pass
         self._prune(batch_id)
         self._release_lock()
+
+    def commit_appends(
+        self, batch_id: int, appends: Sequence[Callable[[], object]]
+    ) -> None:
+        """Run one batch's ``appends`` in order inside one manifest-last
+        commit: ``begin``, then each append with a :meth:`heartbeat`
+        before every append after the first (the TTL discipline), then
+        ``commit``. A raise anywhere leaves the pending record for the
+        next ``recover()`` to roll back."""
+        self.begin(batch_id)
+        for i, append in enumerate(appends):
+            if i:
+                self.heartbeat()
+            append()
+        self.commit(batch_id)
 
     def _prune(self, latest: int) -> None:
         for fn in os.listdir(self.log_dir):

@@ -26,38 +26,19 @@ O(batch + matching digests), independent of corpus size.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
-
-
-def has_parquet(path: str) -> bool:
-    """True iff ``path`` holds at least one parquet file (recursively)
-    — the empty-state probe every stateful sink shares."""
-    if not os.path.isdir(path):
-        return False
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
-
-
-def field_ddl(schema: T.StructType | str, name: str) -> str:
-    """DDL type string of one field of a (possibly DDL-string) schema
-    — used to type EMPTY state frames from the sink's own source
-    schema instead of hardcoding bigint ids (string doc ids are
-    common; a hardcoded type would break the first batch's union)."""
-    st = (
-        T._parse_datatype_string(schema)
-        if isinstance(schema, str)
-        else schema
-    )
-    return st[name].dataType.simpleString()
+from hadoop_data_pipeline_spark.streaming.maintenance import compact_sink_stores
+from hadoop_data_pipeline_spark.streaming.sink import (
+    drain_available_now,
+    has_parquet,
+    parquet_stream,
+    stage_and_release,
+)
 
 
 def first_per_digest(
@@ -75,33 +56,6 @@ def first_per_digest(
         .where(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def stage_and_release(
-    df: DataFrame, staging_dir: str
-) -> tuple[DataFrame, "object"]:
-    """Materialize ``df`` to a per-batch staging parquet and return
-    (re-read frame, release callable). The survivor set of a
-    state-mutating sink must be decided EXACTLY ONCE: its plan reads
-    the state directories the subsequent appends mutate, and any
-    re-evaluation (cache-plan mismatch — observed with
-    `write_band_index`'s derived plan — or an evicted cached/
-    checkpointed block) would re-run the probe against post-append
-    state and silently append wrong (usually empty) rows. A staging
-    write cuts the lineage completely and, unlike `localCheckpoint`,
-    releases its storage deterministically (the callable removes the
-    directory; a crash leaves only an orphan staging dir that the
-    replayed batch overwrites)."""
-    import shutil
-
-    spark = df.sparkSession
-    df.write.mode("overwrite").parquet(staging_dir)
-    staged = spark.read.parquet(staging_dir)
-
-    def release() -> None:
-        shutil.rmtree(staging_dir, ignore_errors=True)
-
-    return staged, release
 
 
 class StreamingDedupSink:
@@ -132,11 +86,6 @@ class StreamingDedupSink:
             run_id_file=f"{self.checkpoint}/metadata",
         )
 
-    def _existing_digests(self) -> DataFrame | None:
-        if not has_parquet(self.digest_dir):
-            return None
-        return self.spark.read.parquet(self.digest_dir).select("digest")
-
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         if self.commit_log.is_committed(batch_id):
             # replay of a batch whose marker landed before the engine's
@@ -144,31 +93,24 @@ class StreamingDedupSink:
             # stores; re-appending would duplicate it.
             return
         first = first_per_digest(batch_df, self.text_col, self.id_col)
-        idx = self._existing_digests()
+        if has_parquet(self.digest_dir):
+            stored = self.spark.read.parquet(self.digest_dir).select("digest")
+            first = first.join(stored, "digest", "left_anti")
         # Decide survivors EXACTLY ONCE (see stage_and_release): the
         # plan reads the digest store the second append mutates, so
         # it must not be re-evaluable after the first append.
-        survivors, release = stage_and_release(
-            first.join(idx, "digest", "left_anti") if idx is not None else first,
-            f"{self.checkpoint}/staging-{batch_id}",
-        )
-        try:
+        with stage_and_release(
+            first, f"{self.checkpoint}/staging-{batch_id}"
+        ) as survivors:
             # both appends inside one manifest-last commit — a crash
             # anywhere in here rolls back to the begin() snapshot on
             # the next tick (see module doc).
-            self.commit_log.begin(batch_id)
-            survivors.drop("digest").write.mode("append").parquet(
-                self.clean_dir
-            )
-            # TTL discipline: verify ownership immediately before each
-            # further append (commitlog module doc, residual-window note)
-            self.commit_log.heartbeat()
-            survivors.select("digest").write.mode("append").parquet(
-                self.digest_dir
-            )
-            self.commit_log.commit(batch_id)
-        finally:
-            release()
+            clean = survivors.drop("digest").write.mode("append")
+            digests = survivors.select("digest").write.mode("append")
+            self.commit_log.commit_appends(batch_id, [
+                lambda: clean.parquet(self.clean_dir),
+                lambda: digests.parquet(self.digest_dir),
+            ])
 
     def compact_stores(
         self, target_bytes: int = 128 * 1024 * 1024
@@ -178,46 +120,19 @@ class StreamingDedupSink:
         coalesce), under the commit log's writer lease
         (`streaming/maintenance.py`). Run after a drain, never during
         a tick (a live tick makes it raise ConcurrentWriterError)."""
-        from hadoop_data_pipeline_spark.streaming.maintenance import (
-            compact_sink_stores,
-        )
-
         return compact_sink_stores(
             self.spark, self.commit_log, target_bytes=target_bytes
         )
 
     def run_available_now(self, timeout_sec: int = 120) -> bool:
         """Drain everything currently in ``source_dir``, then stop —
-        one cron tick of continuous ingest. Re-running after new files
-        arrive processes ONLY the new files (file-source checkpoint)."""
+        one cron tick of continuous ingest (:func:`drain_available_now`)."""
         # roll back any half-committed batch BEFORE the engine replays
         # it — the replay must recompute against pre-batch state.
         self.commit_log.recover()
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(self.source_dir)
+        return drain_available_now(
+            parquet_stream(self.spark, self.schema, self.source_dir),
+            self._process_batch,
+            self.checkpoint,
+            timeout_sec,
         )
-        query = (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = query.awaitTermination(timeout_sec)
-        # awaitTermination returns True for a FAILED termination too —
-        # surface the foreachBatch exception instead of reporting a
-        # green tick with partial state.
-        if query.exception() is not None:
-            raise query.exception()
-        if not done:
-            # TIMEOUT: the query is still RUNNING. Returning without
-            # stopping it would let a retrying caller race a live
-            # batch — the retry's recover() (same commit-log instance,
-            # lease already held by the in-flight begin) would roll
-            # back that batch's appends mid-write. stop() terminates
-            # the query, aborting any in-flight batch — exactly the
-            # crash shape the commit log already recovers from — so
-            # no live writer survives this return.
-            query.stop()
-        return done

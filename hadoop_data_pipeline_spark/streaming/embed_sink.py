@@ -52,6 +52,14 @@ from hadoop_data_pipeline_spark.functions import dual
 from hadoop_data_pipeline_spark.operators import dedup
 from hadoop_data_pipeline_spark.operators import similarity as sim
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
+from hadoop_data_pipeline_spark.streaming.maintenance import compact_sink_stores
+from hadoop_data_pipeline_spark.streaming.sink import (
+    drain_available_now,
+    field_ddl,
+    parquet_stream,
+    read_store,
+    stage_and_release,
+)
 
 
 class StreamingEmbeddingSink:
@@ -123,27 +131,16 @@ class StreamingEmbeddingSink:
 
     # -- persisted state --------------------------------------------------
 
-    def _id_ddl(self) -> str:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import field_ddl
-
-        return field_ddl(self.schema, self.id_col)
-
     def store(self) -> DataFrame:
         """The admitted vector store (empty-safe, typed)."""
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import field_ddl
-
-        if has_parquet(self.store_dir):
-            return self.spark.read.parquet(self.store_dir)
-        base = (
-            f"{self.id_col} {self._id_ddl()}, "
+        ddl = (
+            f"{self.id_col} {field_ddl(self.schema, self.id_col)}, "
             f"{self.vec_col} {field_ddl(self.schema, self.vec_col)}, "
             f"norm double, bucket int"
         )
         if self.centroids is not None:
-            base += ", cell int"
-        return self.spark.createDataFrame([], base)
+            ddl += ", cell int"
+        return read_store(self.spark, self.store_dir, ddl)
 
     # -- admission --------------------------------------------------------
 
@@ -186,84 +183,43 @@ class StreamingEmbeddingSink:
     # -- streaming --------------------------------------------------------
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import (
-            stage_and_release,
-        )
-
         if self.commit_log.is_committed(batch_id):
             return  # replay of a marker-committed batch: no-op
         enriched = self.enrich(batch_df)
         survivor_ids = self.admit(enriched, self.store())
         # Decide survivors EXACTLY ONCE: the admit plan reads the
         # store directory the append below mutates.
-        survivors, release = stage_and_release(
+        with stage_and_release(
             enriched.join(survivor_ids, self.id_col),
             f"{self.checkpoint}/staging-{batch_id}",
-        )
-        try:
-            self.commit_log.begin(batch_id)
-            survivors.write.mode("append").parquet(self.store_dir)
-            self.commit_log.commit(batch_id)
-        finally:
-            release()
+        ) as survivors:
+            self.commit_log.commit_appends(batch_id, [
+                lambda: survivors.write.mode("append").parquet(self.store_dir),
+            ])
 
     def run_available_now(self, timeout_sec: int = 120) -> bool:
         """Drain everything currently in ``source_dir``, then stop —
-        one cron tick of continuous vector ingest."""
+        one cron tick of continuous vector ingest
+        (:func:`drain_available_now`)."""
         self.commit_log.recover()
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            # data files only: a sidecar/.tmp file in source_dir must
-            # not become a permanently re-failing tick (same filter
-            # all the text sinks set)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(self.source_dir)
+        return drain_available_now(
+            parquet_stream(self.spark, self.schema, self.source_dir),
+            self._process_batch,
+            self.checkpoint,
+            timeout_sec,
         )
-        query = (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = query.awaitTermination(timeout_sec)
-        if query.exception() is not None:
-            raise query.exception()
-        if not done:
-            # TIMEOUT: the query is still RUNNING. Returning without
-            # stopping it would let a retrying caller race a live
-            # batch — the retry's recover() (same commit-log instance,
-            # lease already held by the in-flight begin) would roll
-            # back that batch's appends mid-write. stop() terminates
-            # the query, aborting any in-flight batch — exactly the
-            # crash shape the commit log already recovers from — so
-            # no live writer survives this return.
-            query.stop()
-        return done
 
     # -- maintenance --------------------------------------------------------
 
     def compact_store(self, target_bytes: int = 128 * 1024 * 1024) -> int:
-        """Between-ticks small-file compaction of the vector store:
-        the sink appends one parquet part set per micro-batch, so a
-        long-running ingest accumulates per-batch small files whose
-        open/footer cost eventually dominates every probe
-        (`operators/layout.py::compact_small_files` — same
-        FS-listing sizing and rename-swap crash safety).
-
-        Safety contract: rolls back any dead batch first
-        (``recover()``), then holds the commit log's single-writer
-        lease for the whole rewrite — the log's rollback deletes
-        store files absent from a pending snapshot, so a compaction
-        racing a live batch would either lose the rewrite or feed
-        rollback a renamed file set; under the lease neither writer
-        can start. Raises
+        """Between-ticks small-file compaction of the vector store, whose
+        per-batch part files would otherwise come to dominate every
+        probe's open/footer cost. Runs under the commit log's writer
+        lease (safety contract in `streaming/maintenance.py`), so it
+        raises
         :class:`~hadoop_data_pipeline_spark.streaming.commitlog.ConcurrentWriterError`
         if a tick is live. Returns the post-compaction file count
         (0 for a store that has not admitted anything yet)."""
-        from hadoop_data_pipeline_spark.streaming.maintenance import (
-            compact_sink_stores,
-        )
-
         return compact_sink_stores(
             self.spark, self.commit_log, target_bytes=target_bytes
         )["store"]

@@ -20,14 +20,13 @@ transformation definition.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from hadoop_data_pipeline_spark.atomic import atomic_write_partition
 from hadoop_data_pipeline_spark.pipeline import wide_to_long
+from hadoop_data_pipeline_spark.streaming.sink import drain_available_now
 
 
 class StreamingFilePipeline:
@@ -82,43 +81,20 @@ class StreamingFilePipeline:
         half-written year. The touched-year list is bounded by the
         micro-batch's file set (driver-side collect of a few ints)."""
         wide = self.normalize(batch_df).persist()
-        years = [r["year"] for r in wide.select("year").distinct().collect()]
-        for y in years:
-            year_df = wide.where(F.col("year") == y)
-            atomic_write_partition(year_df, self.wide_path, "year", y)
-            atomic_write_partition(
-                wide_to_long(year_df), self.long_path, "year", y
-            )
-        wide.unpersist()
+        try:
+            years = [r["year"] for r in wide.select("year").distinct().collect()]
+            for y in years:
+                year_df = wide.where(F.col("year") == y)
+                atomic_write_partition(year_df, self.wide_path, "year", y)
+                atomic_write_partition(
+                    wide_to_long(year_df), self.long_path, "year", y
+                )
+        finally:
+            wide.unpersist()
 
-    def run_available_now(
-        self,
-        batch_hook: Callable[[DataFrame, int], None] | None = None,
-        timeout_sec: int = 120,
-    ) -> bool:
+    def run_available_now(self, timeout_sec: int = 120) -> bool:
         """Process all currently-available files, then stop (the cron
         replacement). Returns True if the query terminated in time."""
-        query = (
-            self.source()
-            .writeStream.foreachBatch(batch_hook or self._write_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
+        return drain_available_now(
+            self.source(), self._write_batch, self.checkpoint, timeout_sec
         )
-        done = query.awaitTermination(timeout_sec)
-        # awaitTermination returns True for a FAILED termination too —
-        # surface the foreachBatch exception instead of reporting a
-        # green tick with partial state.
-        if query.exception() is not None:
-            raise query.exception()
-        if not done:
-            # TIMEOUT: the query is still RUNNING. Returning without
-            # stopping it would let a retrying caller race a live
-            # batch — the retry's recover() (same commit-log instance,
-            # lease already held by the in-flight begin) would roll
-            # back that batch's appends mid-write. stop() terminates
-            # the query, aborting any in-flight batch — exactly the
-            # crash shape the commit log already recovers from — so
-            # no live writer survives this return.
-            query.stop()
-        return done

@@ -25,6 +25,9 @@ in the right subset so users don't have to know this).
 
 from __future__ import annotations
 
+from hadoop_data_pipeline_spark.operators.layout import compact_small_files
+from hadoop_data_pipeline_spark.streaming.sink import has_parquet
+
 
 def compact_sink_stores(
     spark,
@@ -38,11 +41,6 @@ def compact_sink_stores(
     store that has not received data yet). Raises
     :class:`~hadoop_data_pipeline_spark.streaming.commitlog.ConcurrentWriterError`
     while a tick is live — safe to retry after it drains."""
-    from hadoop_data_pipeline_spark.operators.layout import (
-        compact_small_files,
-    )
-    from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
     names = list(commit_log.stores) if stores is None else list(stores)
     unknown = [n for n in names if n not in commit_log.stores]
     if unknown:

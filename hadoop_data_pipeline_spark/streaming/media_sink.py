@@ -50,9 +50,11 @@ from pyspark.sql import types as T
 
 from hadoop_data_pipeline_spark.operators import multimodal as mm
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
-from hadoop_data_pipeline_spark.streaming.dedup_sink import (
+from hadoop_data_pipeline_spark.streaming.sink import (
+    drain_available_now,
     field_ddl,
-    has_parquet,
+    parquet_stream,
+    read_store,
     stage_and_release,
 )
 
@@ -94,18 +96,17 @@ class StreamingMediaSink:
         )
 
     def _band_index(self) -> DataFrame:
-        if has_parquet(self.index_dir):
-            return mm.read_signature_band_index(
+        return read_store(
+            self.spark,
+            self.index_dir,
+            f"{self.id_col} {field_ddl(self.schema, self.id_col)}, "
+            "frame_idx int, dhash bigint, band_id int, band_key bigint",
+            lambda: mm.read_signature_band_index(
                 self.spark,
                 self.index_dir,
                 id_col=self.id_col,
                 frame_col="frame_idx",
-            )
-        id_ddl = field_ddl(self.schema, self.id_col)
-        return self.spark.createDataFrame(
-            [],
-            f"{self.id_col} {id_ddl}, frame_idx int, dhash bigint, "
-            "band_id int, band_key bigint",
+            ),
         )
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -151,52 +152,32 @@ class StreamingMediaSink:
         clean_rows = survivor_docs.join(dec, self.id_col)
         # Decide survivors EXACTLY ONCE (stage_and_release): the probe
         # plan reads the index directory the append below mutates.
-        staged, release = stage_and_release(
+        with stage_and_release(
             clean_rows, f"{self.checkpoint}/staging-{batch_id}"
-        )
-        surv_sig = sig.join(
-            staged.select(self.id_col), self.id_col
-        )
-        staged_sig, release_sig = stage_and_release(
-            surv_sig, f"{self.checkpoint}/staging-sig-{batch_id}"
-        )
-        try:
-            self.commit_log.begin(batch_id)
-            staged.write.mode("append").parquet(self.clean_dir)
-            self.commit_log.heartbeat()
-            mm.write_signature_band_index(
-                staged_sig,
-                self.index_dir,
-                id_col=self.id_col,
-                frame_col="frame_idx",
-                max_hamming=self.max_hamming,
-                n_bands=self.n_bands,
-                mode="append",
-            )
-            self.commit_log.commit(batch_id)
-        finally:
-            release()
-            release_sig()
+        ) as staged, stage_and_release(
+            sig.join(staged.select(self.id_col), self.id_col),
+            f"{self.checkpoint}/staging-sig-{batch_id}",
+        ) as staged_sig:
+            self.commit_log.commit_appends(batch_id, [
+                lambda: staged.write.mode("append").parquet(self.clean_dir),
+                lambda: mm.write_signature_band_index(
+                    staged_sig,
+                    self.index_dir,
+                    id_col=self.id_col,
+                    frame_col="frame_idx",
+                    max_hamming=self.max_hamming,
+                    n_bands=self.n_bands,
+                    mode="append",
+                ),
+            ])
 
     def run_available_now(self, timeout_sec: int = 120) -> bool:
         """Drain everything currently in ``source_dir``, then stop —
-        one tick of continuous ingest (the ``prep_sink`` contract,
-        including the failed-termination and timeout-stop semantics)."""
+        one tick of continuous ingest (:func:`drain_available_now`)."""
         self.commit_log.recover()
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(self.source_dir)
+        return drain_available_now(
+            parquet_stream(self.spark, self.schema, self.source_dir),
+            self._process_batch,
+            self.checkpoint,
+            timeout_sec,
         )
-        query = (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = query.awaitTermination(timeout_sec)
-        if query.exception() is not None:
-            raise query.exception()
-        if not done:
-            query.stop()
-        return done

@@ -30,13 +30,21 @@ restart reads only surviving committed files).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from hadoop_data_pipeline_spark.operators import dedup
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
+from hadoop_data_pipeline_spark.streaming.maintenance import compact_sink_stores
+from hadoop_data_pipeline_spark.streaming.sink import (
+    band_index,
+    clean_docs,
+    drain_available_now,
+    field_ddl,
+    has_parquet,
+    parquet_stream,
+    stage_and_release,
+)
 
 
 class StreamingNearDupSink:
@@ -80,34 +88,6 @@ class StreamingNearDupSink:
             run_id_file=f"{self.checkpoint}/metadata",
         )
 
-    def _id_ddl(self) -> str:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import field_ddl
-
-        return field_ddl(self.schema, self.id_col)
-
-    def _clean_docs(self) -> DataFrame:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
-        if has_parquet(self.clean_dir):
-            return self.spark.read.parquet(self.clean_dir).select(
-                self.id_col, self.text_col
-            )
-        return self.spark.createDataFrame(
-            [], f"{self.id_col} {self._id_ddl()}, {self.text_col} string"
-        )
-
-    def _band_index(self) -> DataFrame:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
-        if has_parquet(self.index_dir):
-            return dedup.read_band_index(
-                self.spark, self.index_dir, self.id_col
-            )
-        return self.spark.createDataFrame(
-            [],
-            f"{self.id_col} {self._id_ddl()}, band_id int, band_key string",
-        )
-
     def _ensure_index_table(self) -> bool:
         """Return True when ``index_table`` is registered and backed by
         data. The session catalog is in-memory (no Hive metastore), so
@@ -119,16 +99,14 @@ class StreamingNearDupSink:
         Spark recovers bucket ids from the file names, so the
         exchange-free probe layout is intact across restarts (pinned by
         the restart test)."""
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import has_parquet
-
         if self.spark.catalog.tableExists(self.index_table):
             return True
         if not has_parquet(self.index_dir):
             return False
         self.spark.sql(
             f"CREATE TABLE {self.index_table} "
-            f"({self.id_col} {self._id_ddl()}, band_id INT, "
-            f"band_key STRING) USING parquet "
+            f"({self.id_col} {field_ddl(self.schema, self.id_col)}, "
+            f"band_id INT, band_key STRING) USING parquet "
             f"CLUSTERED BY (band_key) SORTED BY (band_key) "
             f"INTO {self.n_buckets} BUCKETS "
             f"LOCATION '{self.index_dir}'"
@@ -136,19 +114,18 @@ class StreamingNearDupSink:
         return True
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        from hadoop_data_pipeline_spark.streaming.dedup_sink import (
-            stage_and_release,
-        )
-
         if self.commit_log.is_committed(batch_id):
             # replay of a batch whose marker landed before the engine's
             # checkpoint commit — already fully in the stores.
             return
+        docs = clean_docs(
+            self.spark, self.clean_dir, self.schema, self.id_col, self.text_col
+        )
         if self.index_table and self._ensure_index_table():
             survivor_ids = dedup.incremental_near_dup_against_bucketed_index(
                 self.spark,
                 batch_df,
-                self._clean_docs(),
+                docs,
                 self.index_table,
                 self.text_col,
                 self.id_col,
@@ -157,8 +134,10 @@ class StreamingNearDupSink:
         else:
             survivor_ids = dedup.incremental_near_dup_against_index(
                 batch_df,
-                self._clean_docs(),
-                self._band_index(),
+                docs,
+                band_index(
+                    self.spark, self.index_dir, self.schema, self.id_col
+                ),
                 self.text_col,
                 self.id_col,
                 self.threshold,
@@ -168,52 +147,45 @@ class StreamingNearDupSink:
         # which the appends below mutate — a re-evaluation would see
         # every survivor as its own near-duplicate and silently
         # append 0 index rows.
-        survivors, release = stage_and_release(
+        with stage_and_release(
             batch_df.join(survivor_ids, self.id_col),
             f"{self.checkpoint}/staging-{batch_id}",
-        )
-        try:
+        ) as survivors:
             # both appends inside one manifest-last commit (module doc).
-            self.commit_log.begin(batch_id)
-            survivors.write.mode("append").parquet(self.clean_dir)
-            # TTL discipline: verify ownership immediately before each
-            # further append (commitlog module doc, residual-window note)
-            self.commit_log.heartbeat()
-            if self.index_table:
-                # first batch creates the bucketed table; later
-                # batches append (Spark validates the bucket spec).
-                mode = (
-                    "append"
-                    if self.spark.catalog.tableExists(self.index_table)
-                    else "overwrite"
-                )
-                dedup.write_band_index_bucketed(
-                    survivors,
-                    self.index_table,
-                    n_buckets=self.n_buckets,
-                    text_col=self.text_col,
-                    id_col=self.id_col,
-                    path=self.index_dir,
-                    mode=mode,
-                )
-                # The append ran on the micro-batch's session clone;
-                # the MAIN session's relation cache for the table is
-                # now stale (observed: spark.table kept serving the
-                # pre-append file list, so the next probe missed this
-                # batch's band keys). Refresh through the sink's own
-                # session, which every later probe uses.
-                self.spark.catalog.refreshTable(self.index_table)
-            else:
-                dedup.write_band_index(
-                    survivors,
-                    self.index_dir,
-                    self.text_col,
-                    self.id_col,
-                    mode="append",
-                )
-            self.commit_log.commit(batch_id)
-        finally:
-            release()
+            self.commit_log.commit_appends(batch_id, [
+                lambda: survivors.write.mode("append").parquet(self.clean_dir),
+                lambda: self._append_index(survivors),
+            ])
+
+    def _append_index(self, survivors: DataFrame) -> None:
+        if not self.index_table:
+            dedup.write_band_index(
+                survivors, self.index_dir, self.text_col, self.id_col,
+                mode="append",
+            )
+            return
+        # first batch creates the bucketed table; later batches append
+        # (Spark validates the bucket spec).
+        mode = (
+            "append"
+            if self.spark.catalog.tableExists(self.index_table)
+            else "overwrite"
+        )
+        dedup.write_band_index_bucketed(
+            survivors,
+            self.index_table,
+            n_buckets=self.n_buckets,
+            text_col=self.text_col,
+            id_col=self.id_col,
+            path=self.index_dir,
+            mode=mode,
+        )
+        # The append ran on the micro-batch's session clone; the MAIN
+        # session's relation cache for the table is now stale
+        # (observed: spark.table kept serving the pre-append file list,
+        # so the next probe missed this batch's band keys). Refresh
+        # through the sink's own session, which every later probe uses.
+        self.spark.catalog.refreshTable(self.index_table)
 
     def compact_stores(
         self, target_bytes: int = 128 * 1024 * 1024
@@ -224,10 +196,6 @@ class StreamingNearDupSink:
         ``index_table`` set it is a BUCKETED table whose bucket-id-to-
         file mapping lives in the file names, and a coalesce rewrite
         would silently break the exchange-free probe layout."""
-        from hadoop_data_pipeline_spark.streaming.maintenance import (
-            compact_sink_stores,
-        )
-
         stores = ["clean"] if self.index_table else ["clean", "index"]
         return compact_sink_stores(
             self.spark,
@@ -238,8 +206,7 @@ class StreamingNearDupSink:
 
     def run_available_now(self, timeout_sec: int = 120) -> bool:
         """Drain everything currently in ``source_dir``, then stop —
-        one tick of continuous ingest; the file-source checkpoint
-        makes the next run process only newly arrived files."""
+        one tick of continuous ingest (:func:`drain_available_now`)."""
         # roll back any half-committed batch BEFORE the engine replays
         # it; in bucketed-table mode the catalog's cached file list may
         # now be stale, so refresh when the table is registered.
@@ -247,31 +214,9 @@ class StreamingNearDupSink:
             self.spark.catalog.tableExists(self.index_table)
         ):
             self.spark.catalog.refreshTable(self.index_table)
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(self.source_dir)
+        return drain_available_now(
+            parquet_stream(self.spark, self.schema, self.source_dir),
+            self._process_batch,
+            self.checkpoint,
+            timeout_sec,
         )
-        query = (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = query.awaitTermination(timeout_sec)
-        # awaitTermination returns True for a FAILED termination too —
-        # surface the foreachBatch exception instead of reporting a
-        # green tick with partial state.
-        if query.exception() is not None:
-            raise query.exception()
-        if not done:
-            # TIMEOUT: the query is still RUNNING. Returning without
-            # stopping it would let a retrying caller race a live
-            # batch — the retry's recover() (same commit-log instance,
-            # lease already held by the in-flight begin) would roll
-            # back that batch's appends mid-write. stop() terminates
-            # the query, aborting any in-flight batch — exactly the
-            # crash shape the commit log already recovers from — so
-            # no live writer survives this return.
-            query.stop()
-        return done

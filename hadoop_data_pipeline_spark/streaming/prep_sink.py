@@ -45,10 +45,14 @@ from hadoop_data_pipeline_spark.functions import dual
 from hadoop_data_pipeline_spark.operators import dedup
 from hadoop_data_pipeline_spark.operators import text as tx
 from hadoop_data_pipeline_spark.streaming.commitlog import BatchCommitLog
-from hadoop_data_pipeline_spark.streaming.dedup_sink import (
-    field_ddl,
-    first_per_digest,
+from hadoop_data_pipeline_spark.streaming.dedup_sink import first_per_digest
+from hadoop_data_pipeline_spark.streaming.maintenance import compact_sink_stores
+from hadoop_data_pipeline_spark.streaming.sink import (
+    band_index,
+    clean_docs,
+    drain_available_now,
     has_parquet,
+    parquet_stream,
     stage_and_release,
 )
 
@@ -95,36 +99,6 @@ class StreamingPrepSink:
             run_id_file=f"{self.checkpoint}/metadata",
         )
 
-    # -- persisted-state readers (empty-safe, typed from the source
-    # schema so non-bigint doc ids work from the first batch) --------
-
-    def _id_ddl(self) -> str:
-        return field_ddl(self.schema, self.id_col)
-
-    def _clean_docs(self) -> DataFrame:
-        if has_parquet(self.clean_dir):
-            return self.spark.read.parquet(self.clean_dir).select(
-                self.id_col, self.text_col
-            )
-        return self.spark.createDataFrame(
-            [], f"{self.id_col} {self._id_ddl()}, {self.text_col} string"
-        )
-
-    def _digests(self) -> DataFrame | None:
-        if has_parquet(self.digest_dir):
-            return self.spark.read.parquet(self.digest_dir).select("digest")
-        return None
-
-    def _band_index(self) -> DataFrame:
-        if has_parquet(self.index_dir):
-            return dedup.read_band_index(
-                self.spark, self.index_dir, self.id_col
-            )
-        return self.spark.createDataFrame(
-            [],
-            f"{self.id_col} {self._id_ddl()}, band_id int, band_key string",
-        )
-
     # -- the pipeline ---------------------------------------------------
 
     def gate(self, df: DataFrame) -> DataFrame:
@@ -151,54 +125,53 @@ class StreamingPrepSink:
         # exact dedup (shared convention, see dedup_sink.first_per_
         # digest): first occurrence within the batch, then anti-join
         # the digest store — digests only, never text.
-        first = first_per_digest(gated, self.text_col, self.id_col)
-        idx = self._digests()
-        exact = (
-            first.join(idx, "digest", "left_anti") if idx is not None else first
-        ).persist()
-        # near-dup: probe the persisted band index (+ within batch).
-        survivor_ids = dedup.incremental_near_dup_against_index(
-            exact.drop("digest"),
-            self._clean_docs(),
-            self._band_index(),
-            self.text_col,
-            self.id_col,
-            self.threshold,
-        )
-        # Decide the survivor set EXACTLY ONCE (see stage_and_release):
-        # the probe plan reads the clean zone and the band index, and
-        # the appends below MUTATE those directories — a re-evaluation
-        # would see every survivor as its own near-duplicate
-        # (observed: the band-index append silently wrote 0 rows).
-        survivors, release = stage_and_release(
-            exact.join(survivor_ids, self.id_col),
-            f"{self.checkpoint}/staging-{batch_id}",
-        )
+        exact = first_per_digest(gated, self.text_col, self.id_col)
+        if has_parquet(self.digest_dir):
+            stored = self.spark.read.parquet(self.digest_dir).select("digest")
+            exact = exact.join(stored, "digest", "left_anti")
+        exact = exact.persist()
         try:
-            # all three appends inside one manifest-last commit; the
-            # index-before-digests order is defense in depth (module
-            # doc).
-            self.commit_log.begin(batch_id)
-            survivors.drop("digest").write.mode("append").parquet(
-                self.clean_dir
-            )
-            # TTL discipline: verify ownership immediately before each
-            # further append (commitlog module doc, residual-window note)
-            self.commit_log.heartbeat()
-            dedup.write_band_index(
-                survivors.drop("digest"),
-                self.index_dir,
+            # near-dup: probe the persisted band index (+ within batch).
+            survivor_ids = dedup.incremental_near_dup_against_index(
+                exact.drop("digest"),
+                clean_docs(
+                    self.spark,
+                    self.clean_dir,
+                    self.schema,
+                    self.id_col,
+                    self.text_col,
+                ),
+                band_index(
+                    self.spark, self.index_dir, self.schema, self.id_col
+                ),
                 self.text_col,
                 self.id_col,
-                mode="append",
+                self.threshold,
             )
-            self.commit_log.heartbeat()
-            survivors.select("digest").write.mode("append").parquet(
-                self.digest_dir
-            )
-            self.commit_log.commit(batch_id)
+            # Decide the survivor set EXACTLY ONCE (see
+            # stage_and_release): the probe plan reads the clean zone
+            # and the band index, and the appends below MUTATE those
+            # directories — a re-evaluation would see every survivor
+            # as its own near-duplicate (observed: the band-index
+            # append silently wrote 0 rows).
+            with stage_and_release(
+                exact.join(survivor_ids, self.id_col),
+                f"{self.checkpoint}/staging-{batch_id}",
+            ) as survivors:
+                # all three appends inside one manifest-last commit;
+                # the index-before-digests order is defense in depth
+                # (module doc).
+                docs = survivors.drop("digest")
+                digests = survivors.select("digest").write.mode("append")
+                self.commit_log.commit_appends(batch_id, [
+                    lambda: docs.write.mode("append").parquet(self.clean_dir),
+                    lambda: dedup.write_band_index(
+                        docs, self.index_dir, self.text_col, self.id_col,
+                        mode="append",
+                    ),
+                    lambda: digests.parquet(self.digest_dir),
+                ])
         finally:
-            release()
             exact.unpersist()
 
     def compact_stores(
@@ -208,46 +181,19 @@ class StreamingPrepSink:
         (clean zone, plain band index, digest store — all append-only
         parquet directories) under the commit log's writer lease
         (`streaming/maintenance.py`)."""
-        from hadoop_data_pipeline_spark.streaming.maintenance import (
-            compact_sink_stores,
-        )
-
         return compact_sink_stores(
             self.spark, self.commit_log, target_bytes=target_bytes
         )
 
     def run_available_now(self, timeout_sec: int = 120) -> bool:
         """Drain everything currently in ``source_dir``, then stop —
-        one tick of continuous ingest; the file-source checkpoint
-        makes the next run process only newly arrived files."""
+        one tick of continuous ingest (:func:`drain_available_now`)."""
         # roll back any half-committed batch BEFORE the engine replays
         # it — the replay must recompute against pre-batch state.
         self.commit_log.recover()
-        stream = (
-            self.spark.readStream.schema(self.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .parquet(self.source_dir)
+        return drain_available_now(
+            parquet_stream(self.spark, self.schema, self.source_dir),
+            self._process_batch,
+            self.checkpoint,
+            timeout_sec,
         )
-        query = (
-            stream.writeStream.foreachBatch(self._process_batch)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        done = query.awaitTermination(timeout_sec)
-        # awaitTermination returns True for a FAILED termination too —
-        # surface the foreachBatch exception instead of reporting a
-        # green tick with partial state.
-        if query.exception() is not None:
-            raise query.exception()
-        if not done:
-            # TIMEOUT: the query is still RUNNING. Returning without
-            # stopping it would let a retrying caller race a live
-            # batch — the retry's recover() (same commit-log instance,
-            # lease already held by the in-flight begin) would roll
-            # back that batch's appends mid-write. stop() terminates
-            # the query, aborting any in-flight batch — exactly the
-            # crash shape the commit log already recovers from — so
-            # no live writer survives this return.
-            query.stop()
-        return done

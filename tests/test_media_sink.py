@@ -159,3 +159,33 @@ def test_stream_media_sink_replay_of_committed_batch_is_noop(
     batch0 = spark.read.schema(SCHEMA).parquet(str(src))
     sink._process_batch(batch0, 0)
     assert spark.read.parquet(str(tmp_path / "clean")).count() == before
+
+
+def test_stream_media_sink_failed_staging_leaves_no_staging_dir(
+    spark, tmp_path, corpus, monkeypatch
+):
+    """A batch whose second staging write fails still removes every
+    per-batch staging directory, the first one included."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    src = tmp_path / "src"
+    ckpt = tmp_path / "ckpt"
+    sink = StreamingMediaSink(
+        spark, str(src), SCHEMA,
+        str(tmp_path / "clean"), str(tmp_path / "index"), str(ckpt),
+    )
+    corpus.where("doc_id < 10").coalesce(1).write.mode("append").parquet(
+        str(src)
+    )
+    batch0 = spark.read.schema(SCHEMA).parquet(str(src))
+    real_parquet = DataFrameWriter.parquet
+
+    def flaky_parquet(self, path, *args, **kwargs):
+        if "staging-sig-" in str(path):
+            raise RuntimeError("injected staging failure")
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky_parquet)
+    with pytest.raises(RuntimeError, match="injected staging failure"):
+        sink._process_batch(batch0, 0)
+    assert list(ckpt.glob("staging-*")) == []

@@ -38,13 +38,8 @@ def _events_stream_dir(spark, tmp_path):
     return out, batch
 
 
-def test_file_pipeline_available_now_and_checkpoint(spark, tmp_path):
-    _write_csv(
-        tmp_path, 2024, "a.csv",
-        [("2024-01", 6.0, "spent", 1.0, 2.0, 3.0),
-         ("all-year-budget", 60.0, "budget", 10.0, 20.0, 30.0)],
-    )
-    p = StreamingFilePipeline(
+def _file_pipeline(spark, tmp_path) -> StreamingFilePipeline:
+    return StreamingFilePipeline(
         spark,
         raw_root=str(tmp_path / "raw"),
         wide_path=str(tmp_path / "wide"),
@@ -52,13 +47,26 @@ def test_file_pipeline_available_now_and_checkpoint(spark, tmp_path):
         checkpoint=str(tmp_path / "ckpt"),
         schema=WIDE_SCHEMA,
     )
+
+
+def test_file_pipeline_available_now_and_checkpoint(
+    spark, tmp_path, monkeypatch
+):
+    _write_csv(
+        tmp_path, 2024, "a.csv",
+        [("2024-01", 6.0, "spent", 1.0, 2.0, 3.0),
+         ("all-year-budget", 60.0, "budget", 10.0, 20.0, 30.0)],
+    )
+    p = _file_pipeline(spark, tmp_path)
     seen_batches: list[int] = []
+    write_batch = p._write_batch
 
-    def hook(df, batch_id):
+    def recording_write_batch(df, batch_id):
         seen_batches.append(df.count())
-        p._write_batch(df, batch_id)
+        write_batch(df, batch_id)
 
-    assert p.run_available_now(batch_hook=hook)
+    monkeypatch.setattr(p, "_write_batch", recording_write_batch)
+    assert p.run_available_now()
     assert seen_batches == [2]
     wide = spark.read.parquet(str(tmp_path / "wide"))
     assert wide.count() == 2
@@ -68,13 +76,32 @@ def test_file_pipeline_available_now_and_checkpoint(spark, tmp_path):
     _write_csv(
         tmp_path, 2023, "b.csv", [("2023-05", 3.0, "spent", 1.0, 1.0, 1.0)]
     )
-    assert p.run_available_now(batch_hook=hook)
+    assert p.run_available_now()
     assert seen_batches == [2, 1]  # only the new file's rows
     assert spark.read.parquet(str(tmp_path / "wide")).count() == 3
 
     # Third trigger, nothing new -> empty or no batch.
-    assert p.run_available_now(batch_hook=hook)
+    assert p.run_available_now()
     assert sum(seen_batches) == 3
+
+
+def test_file_pipeline_timeout_stops_the_query(spark, tmp_path, monkeypatch):
+    """A tick whose batch outlasts ``timeout_sec`` returns False and
+    stops its query before returning: no live writer is left to race
+    the next tick's recovery."""
+    _write_csv(
+        tmp_path, 2024, "a.csv", [("2024-01", 6.0, "spent", 1.0, 2.0, 3.0)]
+    )
+    p = _file_pipeline(spark, tmp_path)
+    write_batch = p._write_batch
+
+    def slow_write_batch(df, batch_id):
+        time.sleep(5)
+        write_batch(df, batch_id)
+
+    monkeypatch.setattr(p, "_write_batch", slow_write_batch)
+    assert p.run_available_now(timeout_sec=1) is False
+    assert spark.streams.active == []
 
 
 def test_stream_windows_match_batch(spark, tmp_path):
@@ -1365,6 +1392,116 @@ def test_stream_prep_sink_crash_between_appends(spark, tmp_path, monkeypatch):
     assert sorted(
         r.doc_id for r in idx.select("doc_id").distinct().collect()
     ) == [1, 2, 8]
+
+
+def test_stream_neardup_sink_crash_between_appends(
+    spark, tmp_path, monkeypatch
+):
+    """Crash injection in the near-dup sink: kill between the clean-zone
+    and band-index appends, replay, and assert the clean zone equals a
+    crash-free run's with zero duplicate rows."""
+    import os
+
+    from hadoop_data_pipeline_spark.operators import dedup as dd
+    from hadoop_data_pipeline_spark.streaming.neardup_sink import (
+        StreamingNearDupSink,
+    )
+
+    schema = "doc_id long, text string"
+    base = (
+        "alpha beta gamma delta epsilon zeta eta theta iota kappa "
+        "lambda mu nu xi omicron pi rho sigma tau upsilon"
+    )
+    ships = (
+        "totally different words about ships and harbors with cargo "
+        "cranes and tide tables every morning"
+    )
+    batches = [
+        [(1, base), (2, ships)],
+        [
+            (10, ships + " again"),      # near-dup of 2 — must die
+            (11, "unrelated corpus line with entirely fresh vocabulary "
+                 "spanning many nouns"),
+            (12, base + " extra"),       # near-dup of 1 — must die
+        ],
+    ]
+
+    def make_sink(root):
+        return StreamingNearDupSink(
+            spark,
+            source_dir=str(root / "src"),
+            schema=schema,
+            clean_dir=str(root / "clean"),
+            index_dir=str(root / "index"),
+            checkpoint=str(root / "ckpt"),
+            threshold=0.5,
+        )
+
+    def land(root, rows):
+        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
+            "append"
+        ).parquet(str(root / "src"))
+
+    def clean_ids(root):
+        clean = spark.read.parquet(str(root / "clean"))
+        return sorted(r.doc_id for r in clean.select("doc_id").collect())
+
+    def index_ids(root):
+        idx = dd.read_band_index(spark, str(root / "index"), "doc_id")
+        return sorted(
+            r.doc_id for r in idx.select("doc_id").distinct().collect()
+        )
+
+    # the crash-free run the replayed one must equal
+    ref_root = tmp_path / "ref"
+    ref = make_sink(ref_root)
+    for rows in batches:
+        land(ref_root, rows)
+        assert ref.run_available_now()
+    want = clean_ids(ref_root)
+    assert want == [1, 2, 11]
+
+    root = tmp_path / "crash"
+    sink = make_sink(root)
+    land(root, batches[0])
+    assert sink.run_available_now()
+
+    # arm: the band-index append of the NEXT batch dies after the
+    # clean-zone append landed.
+    real_write_band_index = dd.write_band_index
+    armed = {"on": True}
+
+    def flaky_write_band_index(*args, **kwargs):
+        if armed["on"]:
+            raise RuntimeError("injected crash before index append")
+        return real_write_band_index(*args, **kwargs)
+
+    monkeypatch.setattr(dd, "write_band_index", flaky_write_band_index)
+    land(root, batches[1])
+    with pytest.raises(Exception, match="injected crash"):
+        sink.run_available_now()
+    # the partial commit is visible: clean zone grew, index did not
+    assert clean_ids(root) == [1, 2, 11]
+    assert index_ids(root) == [1, 2]
+
+    # replay tick: rollback + recompute -> exactly-once
+    armed["on"] = False
+    assert sink.run_available_now()
+    got = clean_ids(root)
+    assert got == want
+    assert len(got) == len(set(got))
+    assert index_ids(root) == want
+
+    # replay of a marker-committed batch (engine checkpoint lost after
+    # our commit): a direct re-run of the batch is a no-op.
+    committed = max(
+        int(f[len("commit-"):-len(".json")])
+        for f in os.listdir(str(root / "ckpt" / "commitlog"))
+        if f.startswith("commit-")
+    )
+    sink._process_batch(spark.createDataFrame(batches[1], schema), committed)
+    assert clean_ids(root) == want
+    assert index_ids(root) == want
 
 
 def test_stream_neardup_sink_bucketed_index_restart(spark, tmp_path):
