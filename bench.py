@@ -2,9 +2,10 @@
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE compact JSON line as the final stdout line:
 {"metric": ..., "value": total_sec, "unit": "sec", "sf": ...,
-"n_queries": N, "queries": {...ALL per-query seconds...}}.
-Since r17 the line carries every query's timing (compact separators,
-~6 KB) so the round driver can compute a real per-query geomean;
+"n_queries": N, "queries": {...seconds of every query that succeeded...}}.
+Since r17 the line carries every successful query's timing (compact
+separators, ~6 KB) so the round driver can compute a real per-query
+geomean; failed queries appear only in "failed"/"n_failed";
 BENCH_DETAILS.json next to this file additionally records per-rep
 samples.
 
@@ -195,6 +196,7 @@ def main() -> None:
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
     timings: dict[str, float] = {}
     rep_timings: dict[str, list[float]] = {}
+    failed: list[str] = []
     # Fixed ALPHABETICAL execution order, independent of the driver
     # correctness window: _apply_driver_window() reorders QUERIES each
     # round, and r9 showed that whatever lands in the early slots
@@ -234,11 +236,15 @@ def main() -> None:
                 print(f"bench: {name} failed: {ex}", file=sys.stderr)
                 break
         rep_timings[name] = samples
-        timings[name] = min(samples) if samples else -1.0
+        # "queries" carries real timings only; a failed query is listed
+        # in "failed"/"n_failed", never as a negative time.
+        if samples:
+            timings[name] = min(samples)
+        else:
+            failed.append(name)
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    failed = sorted(n for n, v in timings.items() if v < 0)
     # r17 (VERDICT r16 item 2): the final line used to carry only the
     # 5 slowest per-query timings, which left the round driver's
     # per-query comparison with n_common = 0 and no geomean — real
@@ -250,18 +256,14 @@ def main() -> None:
     # is unchanged and the 5 slowest are still a subset of "queries".
     details = {
         "metric": "catalog_total_runtime",
-        "value": round(sum(v for v in timings.values() if v >= 0), 3),
+        "value": round(sum(timings.values()), 3),
         "unit": "sec",
         "sf": sf_val,
-        "n_queries": len(timings),
+        "n_queries": len(rep_timings),
         "n_failed": len(failed),
         # catalog_total_runtime grows with catalog size; per-query mean
         # is the round-over-round comparable number.
-        "sec_per_query": round(
-            sum(v for v in timings.values() if v >= 0)
-            / max(1, len(timings) - len(failed)),
-            3,
-        ),
+        "sec_per_query": round(sum(timings.values()) / max(1, len(timings)), 3),
         "failed": failed,
         "calib": {
             "jvm_sec": calib_jvm,
@@ -287,7 +289,7 @@ def main() -> None:
         "value": details["value"],
         "unit": "sec",
         "sf": sf_val,
-        "n_queries": len(timings),
+        "n_queries": details["n_queries"],
         "n_failed": len(failed),
         "sec_per_query": details["sec_per_query"],
         "calib": details["calib"],

@@ -597,7 +597,7 @@ def provenance_file_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3: provenance column from the hidden ``_metadata.file_path``
     (modern replacement for ``input_file_name()``,
     reference ``jobs/finance_pipeline.py:25``)."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    orders = load_table(spark, sf_dir, "orders")
     return (
         orders.select(
             F.element_at(F.split(F.col("_metadata.file_path"), "/"), -1).alias(
@@ -5606,6 +5606,13 @@ def pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "count(distinct l_partkey) + count(distinct l_suppkey) AS n"
         ).collect()[0]["n"]
     )
+    if n_nodes == 0:
+        # No edges: nothing to rank, and the teleport term would
+        # divide by zero.
+        ed0.unpersist()
+        return spark.createDataFrame(
+            [], "node_id bigint, node_type string, rank_scaled bigint"
+        )
     # Per-call unique view names: two concurrent calls in one
     # SparkSession (e.g. different sf_dir) must not bind one call's
     # unrolled plan to the other's frames via a shared session-global

@@ -11,11 +11,20 @@ Parquet scans (S3) rely on Catalyst's built-in column pruning and
 predicate pushdown — callers express filters/projections declaratively
 and the parquet reader receives them (visible as ``PushedFilters`` /
 ``ReadSchema`` in ``df.explain("formatted")``).
+
+``load_table`` memoizes each fixture file's inferred parquet schema in
+``_SCHEMAS``: a bare ``spark.read.parquet`` runs one footer-inference
+job per call, which would make building every catalog query fire a
+Spark job before any action. The memo holds one entry per real path,
+keyed by the file's ``(st_ino, st_size, st_mtime_ns)`` and the session
+confs that change inference (``_INFERENCE_CONFS``); the footer stays
+the single source of truth, and a rewritten file is inferred again.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -34,6 +43,17 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+#: Session confs whose value changes what parquet schema inference
+#: returns (``nanosAsLong`` is forced by :func:`load_table` itself).
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: real path -> (file signature, inferred schema); see :func:`load_table`.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
@@ -216,12 +236,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``tests/test_operators_core.py::test_fixture_schema_contract``
     pins the post-load schema so a driver-side fixture regeneration
     fails one obvious test instead of six scattered ones.
+
+    Schema memo: inference reads the footer in a Spark job on every
+    bare ``spark.read.parquet``. For a regular local file the inferred
+    ``StructType`` is kept in ``_SCHEMAS`` under the file's real path,
+    with the signature ``(st_ino, st_size, st_mtime_ns)`` plus the
+    values of ``_INFERENCE_CONFS``. While the signature matches, the
+    read passes the memoized schema and fires no job; a changed file or
+    conf infers again and replaces that path's entry. A path
+    ``os.stat`` cannot see, or a directory (a Spark-written table whose
+    part files may change without touching the directory's own stat),
+    is inferred on every call and never cached.
     """
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:  # pragma: no cover - read-only conf on some builds
         pass
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = _read_parquet_memo(spark, os.path.join(sf_dir, f"{name}.parquet"))
     for f in df.schema.fields:
         kind = f.dataType.simpleString()
         if f.name == "ts" and kind == "bigint":
@@ -230,6 +261,28 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
         elif kind == "timestamp_ntz":
             df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+    return df
+
+
+def _read_parquet_memo(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema memo of
+    :func:`load_table`. Needs no lock: an entry is replaced whole, so
+    two threads that both miss each store a consistent pair."""
+    real = os.path.realpath(path)
+    try:
+        st = os.stat(real)
+    except OSError:
+        return spark.read.parquet(path)
+    if not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)
+    sig = (st.st_ino, st.st_size, st.st_mtime_ns) + tuple(
+        spark.conf.get(k) for k in _INFERENCE_CONFS
+    )
+    hit = _SCHEMAS.get(real)
+    if hit is not None and hit[0] == sig:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[real] = (sig, df.schema)
     return df
 
 
