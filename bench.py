@@ -7,7 +7,8 @@ Since r17 the line carries every successful query's timing (compact
 separators, ~6 KB) so the round driver can compute a real per-query
 geomean; failed queries appear only in "failed"/"n_failed";
 BENCH_DETAILS.json next to this file additionally records per-rep
-samples.
+samples and, under "profile", each successful query's record from
+``hadoop_data_pipeline_spark.profile`` (its fastest rep).
 
 Each query is forced end-to-end with the ``noop`` write format (full
 computation, no driver-side collect) after a warm-up of the session.
@@ -65,6 +66,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from hadoop_data_pipeline_spark.session import get_session
     from hadoop_data_pipeline_spark import queries_catalog
+    from hadoop_data_pipeline_spark.profile import profile_catalog
 
     spark = get_session("bench")
     # Warm up the JVM / parquet footers so the first query doesn't pay
@@ -194,9 +196,6 @@ def main() -> None:
         pass
 
     reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2")))
-    timings: dict[str, float] = {}
-    rep_timings: dict[str, list[float]] = {}
-    failed: list[str] = []
     # Fixed ALPHABETICAL execution order, independent of the driver
     # correctness window: _apply_driver_window() reorders QUERIES each
     # round, and r9 showed that whatever lands in the early slots
@@ -204,44 +203,18 @@ def main() -> None:
     # cross-round deltas for pack_token_shards / jsonl_roundtrip_docs).
     # A stable order makes BENCH_r{N} per-query timings comparable
     # across window rotations.
-    for name in sorted(queries_catalog.QUERIES):
-        fn = queries_catalog.QUERIES[name]
-        # Isolate queries from each other: drop any persisted frames a
-        # prior query left behind (the dedup/similarity pipelines cache
-        # staged arrays whose lifetime is the lazy result — a later
-        # query must not pay their memory), then nudge the JVM so one
-        # query's garbage doesn't bill the next one's timing.
-        spark.catalog.clearCache()
-        spark.sparkContext._jvm.System.gc()
-        # Best-of-N (default 2): rep 1 absorbs codegen-cache misses and
-        # whatever session state the previous query evicted; the MIN is
-        # the reproducible number (r12 calib-stability finding: raw
-        # single-shot timings swung 2-6x on sub-second queries purely
-        # by seat). clearCache between reps keeps persisted frames from
-        # turning rep 2 into a cache read — only JVM/codegen state
-        # stays warm, matching the isolated-warm A/B protocol that
-        # BENCH_NOTES adjudications already treat as ground truth.
-        samples: list[float] = []
-        for rep in range(reps):
-            if rep:
-                spark.catalog.clearCache()
-            t0 = time.perf_counter()
-            try:
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(round(time.perf_counter() - t0, 3))
-            except Exception as ex:  # noqa: BLE001
-                samples = []
-                print(f"bench: {name} failed: {ex}", file=sys.stderr)
-                break
-        rep_timings[name] = samples
-        # "queries" carries real timings only; a failed query is listed
-        # in "failed"/"n_failed", never as a negative time.
-        if samples:
-            timings[name] = min(samples)
-        else:
-            failed.append(name)
+    # Best-of-N (default 2) with clearCache between reps, after a
+    # clearCache + JVM GC per query (profile_catalog): rep 1 absorbs
+    # codegen-cache misses; the MIN is the reproducible number (r12:
+    # single-shot timings swung 2-6x on sub-second queries by seat).
+    profiles, failed = profile_catalog(
+        spark, sorted(queries_catalog.QUERIES), sf_dir, reps
+    )
+    # "queries" carries real timings only; a failed query is listed in
+    # "failed"/"n_failed", never as a negative time.
+    timings = {name: min(rec["secs"]) for name, rec in profiles.items()}
+    rep_timings = {name: rec["secs"] for name, rec in profiles.items()}
+    rep_timings.update({name: [] for name in failed})
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
@@ -278,6 +251,7 @@ def main() -> None:
         "reps": reps,
         "queries": timings,
         "rep_timings": rep_timings,
+        "profile": profiles,
     }
     details_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAILS.json"
@@ -285,15 +259,9 @@ def main() -> None:
     with open(details_path, "w") as fh:
         json.dump(details, fh, indent=1, sort_keys=True)
     result = {
-        "metric": "catalog_total_runtime",
-        "value": details["value"],
-        "unit": "sec",
-        "sf": sf_val,
-        "n_queries": details["n_queries"],
-        "n_failed": len(failed),
-        "sec_per_query": details["sec_per_query"],
-        "calib": details["calib"],
-        "queries": timings,
+        key: details[key]
+        for key in ("metric", "value", "unit", "sf", "n_queries", "n_failed",
+                    "sec_per_query", "calib", "queries")
     }
     print(json.dumps(result, separators=(",", ":")))
 

@@ -268,13 +268,15 @@ def _cells_row(word: str, n_seeds: int, n_cells: int) -> np.ndarray:
     int64 vector — the per-word unit the vectorized renders stack into
     a (words x seeds) matrix (r17, guide §4.2: hand whole batches to
     NumPy instead of looping cells in Python). Same memoization
-    rationale as :func:`_cell_of`, which supplies every value. Callers
-    must treat the cached array as READ-ONLY."""
-    return np.fromiter(
+    rationale as :func:`_cell_of`, which supplies every value. The
+    cached array is shared by every caller, so it is read-only."""
+    row = np.fromiter(
         (_cell_of(word, s, n_cells) for s in range(n_seeds)),
         dtype=np.int64,
         count=n_seeds,
     )
+    row.flags.writeable = False
+    return row
 
 
 def render_histogram_image(

@@ -174,15 +174,18 @@ _SCAN_SHAPE_NODES = {
 
 
 def _is_scan_shaped(df: DataFrame) -> bool:
-    """True iff the frame's ANALYZED logical plan is a chain of
-    row-local ops over exactly one file-source relation — the only
-    shape whose partition count is decided by Spark's split packing
-    (and therefore the only shape :func:`scatter_small_scan` should
-    ever repartition). Walking the analyzed plan costs no physical
-    planning. Unknown/unreadable plans return False (fail-safe: the
-    caller then leaves the frame untouched)."""
+    """True iff the frame's analyzed logical plan, with persisted
+    subtrees substituted, is a chain of row-local ops over exactly one
+    file-source relation — the only shape whose partition count is
+    decided by Spark's split packing (and therefore the only shape
+    :func:`scatter_small_scan` should ever repartition). A persisted
+    scan reads back as an ``InMemoryRelation`` with the partitioning
+    it was cached with, so it is not scan-shaped. The cache lookup
+    (``withCachedData``) costs no physical planning. Unknown/unreadable
+    plans return False (fail-safe: the caller then leaves the frame
+    untouched)."""
     try:
-        node = df._jdf.queryExecution().analyzed()
+        node = df._jdf.queryExecution().withCachedData()
         while True:
             name = node.getClass().getSimpleName()
             if name in _SCAN_SHAPE_NODES:

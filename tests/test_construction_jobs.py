@@ -10,13 +10,13 @@ catalog query's construction jobs to ``CONSTRUCTION_BUDGETS``.
 from __future__ import annotations
 
 import os
-import uuid
 
 import duckdb
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 from hadoop_data_pipeline_spark import queries_catalog as qc
+from hadoop_data_pipeline_spark.profile import profile
 from hadoop_data_pipeline_spark.sources.readers import (
     _SCHEMAS,
     TESTDATA_TABLES,
@@ -61,17 +61,10 @@ CONSTRUCTION_BUDGETS: dict[str, int] = {
 
 
 def _jobs(spark, fn):
-    """Run ``fn()`` under a fresh job group; returns (its result, the
-    number of Spark jobs it fired)."""
-    sc = spark.sparkContext
-    group = f"construction-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    """``fn()``'s result and the number of Spark jobs it fired."""
+    built = []
+    rec = profile(spark, fn, action=built.append)
+    return built[0], rec["build_jobs"]
 
 
 def _rows(df):

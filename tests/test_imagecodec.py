@@ -124,6 +124,14 @@ def test_render_is_deterministic_and_content_addressed():
     assert set(np.unique(arrs)) == {0, 255}
 
 
+def test_cached_render_cells_are_read_only():
+    # the memo hands every caller the same array: a write must raise
+    row = ic._cells_row("key", 3, ic.RENDER_W * ic.RENDER_H)
+    assert ic._cells_row("key", 3, ic.RENDER_W * ic.RENDER_H) is row
+    with pytest.raises(ValueError):
+        row[0] = 0
+
+
 def test_image_pixel_stats_exact_integers():
     rgb = np.full((2, 2, 3), 10, dtype=np.uint8)
     rgb[0, 0, 0] = 22

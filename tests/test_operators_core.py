@@ -539,7 +539,8 @@ def test_scatter_scan_shape_gate(spark):
     """r17 gate: scatter_small_scan repartitions ONLY scan-shaped
     frames (project/filter chains over one file-source relation).
     Frames whose partitioning is governed by an exchange or a cache —
-    aggregates, windows, joins, repartitions, in-memory relations —
+    aggregates, windows, joins, repartitions, in-memory relations,
+    persisted scans —
     come back IDENTICAL (same plan object semantics, no probe, no
     injected exchange), because split packing never decided their
     partition count in the first place."""
@@ -558,9 +559,15 @@ def test_scatter_scan_shape_gate(spark):
     )
     rep = scan.repartition(4)
     mem = spark.createDataFrame([(1,)], "x int")
-    for f in (agg, joined, rep, mem):
-        assert not Q._is_scan_shaped(f)
-        assert Q.scatter_small_scan(f) is f
+    # a persisted scan reads back with the partitioning it was cached
+    # with, and so does a row-local op over it
+    cached = load_table(spark, sf, "supplier").persist()
+    try:
+        for f in (agg, joined, rep, mem, cached, cached.select("s_name")):
+            assert not Q._is_scan_shaped(f)
+            assert Q.scatter_small_scan(f) is f
+    finally:
+        cached.unpersist()
     # scan-shaped small frames still scatter to full parallelism
     assert (
         Q.scatter_small_scan(scan).rdd.getNumPartitions()

@@ -715,10 +715,10 @@ def test_exact_dedup_measured_shuffle_is_digest_sized(spark):
     # A refactor that keeps the groupBy but widens the shuffled row
     # (e.g. dragging `text` along for a later projection) passes the
     # plan-string test and fails here.
-    from tools.metrics_audit import measure
     from hadoop_data_pipeline_spark import queries_catalog as qc
+    from hadoop_data_pipeline_spark.profile import profile
 
-    m = measure(spark, qc.QUERIES["dedup_exact_docs"], SF)
+    m = profile(spark, lambda: qc.QUERIES["dedup_exact_docs"](spark, SF))
     assert m["scan_bytes"] > 0
     assert 0 < m["shuffle_bytes"] < m["scan_bytes"], m
 

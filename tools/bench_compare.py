@@ -70,6 +70,33 @@ def load(spec: str) -> dict:
     return snap
 
 
+def choose_calib(old: dict, new: dict) -> str:
+    """The calibration both snapshots can be normalized by.
+
+    Prefer the sustained multi-core calib (r13, bench.py docstring):
+    the single-thread jvm_sec microbench anti-correlated with real
+    throughput under this host's CPU-steal pattern (r12 finding —
+    calib 0.85 -> 0.31 while raw times moved the opposite way). Only
+    when BOTH snapshots carry jvm_mc_sec, measured on the same probe
+    workload, is it used, so comparisons against pre-r13 snapshots
+    stay possible (flagged as weak)."""
+    if (
+        old.get("calib", {}).get("jvm_mc_sec")
+        and new.get("calib", {}).get("jvm_mc_sec")
+        # same probe workload on both sides, else the division is
+        # systematically scaled by the workload change
+        and old["calib"].get("jvm_mc_rows") == new["calib"].get("jvm_mc_rows")
+    ):
+        return "jvm_mc_sec"
+    print(
+        "WARNING: falling back to single-thread jvm_sec calib "
+        "(one snapshot predates jvm_mc_sec) — cross-session "
+        "normalized ratios are DIRECTIONAL ONLY on this host "
+        "(BENCH_NOTES r12 calib-stability finding)"
+    )
+    return "jvm_sec"
+
+
 def main() -> int:
     old_spec = sys.argv[1] if len(sys.argv) > 1 else "HEAD"
     new_spec = (
@@ -78,28 +105,7 @@ def main() -> int:
         else os.path.join(REPO, "BENCH_DETAILS.json")
     )
     old, new = load(old_spec), load(new_spec)
-    # Prefer the sustained multi-core calib (r13, bench.py docstring):
-    # the single-thread jvm_sec microbench anti-correlated with real
-    # throughput under this host's CPU-steal pattern (r12 finding —
-    # calib 0.85 -> 0.31 while raw times moved the opposite way). Only
-    # when BOTH snapshots carry jvm_mc_sec is it used, so comparisons
-    # against pre-r13 snapshots stay possible (flagged as weak).
-    if (
-        old.get("calib", {}).get("jvm_mc_sec")
-        and new.get("calib", {}).get("jvm_mc_sec")
-        # same probe workload on both sides, else the division is
-        # systematically scaled by the workload change
-        and old["calib"].get("jvm_mc_rows") == new["calib"].get("jvm_mc_rows")
-    ):
-        calib_key = "jvm_mc_sec"
-    else:
-        calib_key = "jvm_sec"
-        print(
-            "WARNING: falling back to single-thread jvm_sec calib "
-            "(one snapshot predates jvm_mc_sec) — cross-session "
-            "normalized ratios are DIRECTIONAL ONLY on this host "
-            "(BENCH_NOTES r12 calib-stability finding)"
-        )
+    calib_key = choose_calib(old, new)
     c_old = float(old["calib"][calib_key])
     c_new = float(new["calib"][calib_key])
     shared = sorted(set(old["queries"]) & set(new["queries"]))

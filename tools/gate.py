@@ -20,6 +20,10 @@ script IS the checklist — run it, and only snapshot on exit 0:
 6. ``tools/task_skew_audit.py`` — per-task straggler shape for the
    user-keyed queries under the 8x hot-key corpus vs pinned
    max/median ratio budgets (r13)
+7. ``tools/spill_rehearsal.py`` in force mode over a subset at sf0.01
+8. ``tools/profile_queries.py`` over every catalog query at sf0.01, one
+   rep each: the query profiles' counters → METRICS.json (step
+   ``metrics_audit``)
 
 Plus a sub-second pinned-artifact drift check (step 0) that runs even
 under ``--skip-pytest``.
@@ -255,17 +259,25 @@ def main() -> int:
                 ],
             )
         )
-        # measured shuffle/spill/scan bytes for EVERY catalog query →
-        # METRICS.json (r14 verdict #2: the audit previously ran by
-        # hand and silently staled — the r14 binary-payload entries
-        # shipped with no committed byte measurements). Fails on any
-        # query error or on coverage < len(QUERIES); spills at
-        # standard memory are reported in the output (expected zero —
-        # the deliberate pressure run lives in tools/spill_rehearsal.py).
+        # measured jobs, stages, tasks and shuffle/spill/scan bytes for
+        # EVERY catalog query at sf0.01, one rep each → METRICS.json
+        # (r14 verdict #2: the audit previously ran by hand and
+        # silently staled — the r14 binary-payload entries shipped with
+        # no committed byte measurements). Fails on any query error or
+        # on coverage < len(QUERIES); spills at standard memory are
+        # reported in the output (expected zero — the deliberate
+        # pressure run lives in tools/spill_rehearsal.py).
         steps.append(
             (
                 "metrics_audit",
-                [sys.executable, "tools/metrics_audit.py"],
+                [
+                    "env",
+                    "SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01",
+                    sys.executable,
+                    "tools/profile_queries.py",
+                    "--reps",
+                    "1",
+                ],
             )
         )
     results = [run(name, cmd) for name, cmd in steps]

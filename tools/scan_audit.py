@@ -3,7 +3,7 @@ per SOURCE TABLE in every catalog query's formatted physical plan and
 assert each stays within its pinned budget.
 
 Why this exists (r11 -> r12 verdict): byte-level metrics
-(`tools/metrics_audit.py`) and wall-time are blind to subtree
+(`tools/profile_queries.py`) and wall-time are blind to subtree
 re-evaluation at sf0.01 — a 22x re-scan of a 1 MB table is invisible
 in both. Counting PLANNED FileScans caught fixed-point PageRank's
 unrolled CTE references (22 real lineitem scans) and the PSI

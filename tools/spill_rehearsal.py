@@ -1,7 +1,8 @@
 """Spill-path rehearsal: run the heaviest shuffle/aggregate catalog
 queries in a deliberately memory-starved session, PROVE that Tungsten
-actually spilled (spill_bytes > 0 from the SQL metrics), and assert
-the results still hash-match the DuckDB oracle (r14 verdict next #1).
+actually spilled (spill_bytes > 0 in the query's profile,
+``hadoop_data_pipeline_spark.profile``), and assert the results still
+hash-match the DuckDB oracle (r14 verdict next #1).
 
 Why this exists: at 128 GiB local the catalog never spills
 (METRICS.json is all zeros), so "degrades gracefully under memory
@@ -49,8 +50,6 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-from tools.metrics_audit import METRIC_KEYS, parse_bytes  # noqa: E402
 
 #: The heaviest shuffle/aggregate/sort entries at sf0.1 (BENCH_r14
 #: top timings + the banded pair families + every operator family
@@ -105,53 +104,6 @@ PRESSURE_CONF = {
 PRESSURE_DRIVER_MEM = "2g"
 PRESSURE_CPUS = "8"
 
-#: Graceful-degradation counters tracked alongside byte metrics: the
-#: hash aggregate's documented behavior under pressure is FALLBACK
-#: (to sort-based), which precedes and sometimes substitutes for
-#: disk spill.
-FALLBACK_KEYS = {
-    "number of sort fallback tasks": "fallback_tasks",
-    "number of hash fallback tasks": "fallback_tasks",
-}
-
-
-def run_with_metrics(spark, fn, sf_dir: str):
-    """Execute one query to pandas and aggregate its SQL spill /
-    shuffle / scan metrics (accumulator-deduped — the AQE relist fix
-    from tools/metrics_audit.measure applies identically here)."""
-    store = spark._jsparkSession.sharedState().statusStore()
-    prior = store.executionsList()
-    last_id = (
-        prior.apply(prior.size() - 1).executionId() if prior.size() else -1
-    )
-    pdf = fn(spark, sf_dir).toPandas()
-    execs = store.executionsList()
-    out = {v: 0 for v in METRIC_KEYS.values()}
-    out["fallback_tasks"] = 0
-    for i in range(execs.size()):
-        ex = execs.apply(i)
-        if ex.executionId() <= last_id:
-            continue
-        vals = store.executionMetrics(ex.executionId())
-        mets = ex.metrics()
-        seen: set[int] = set()
-        for j in range(mets.size()):
-            m = mets.apply(j)
-            key = METRIC_KEYS.get(m.name()) or FALLBACK_KEYS.get(m.name())
-            if key is None or m.accumulatorId() in seen:
-                continue
-            seen.add(m.accumulatorId())
-            v = vals.get(m.accumulatorId())
-            if not v.isDefined():
-                continue
-            if key == "fallback_tasks":
-                first = v.get().splitlines()[-1].split()[0]
-                out[key] += int(first.replace(",", ""))
-            else:
-                out[key] += parse_bytes(v.get())
-    return pdf, out
-
-
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("targets", nargs="*", default=[],
@@ -161,13 +113,9 @@ def main() -> int:
                     default="force")
     ap.add_argument("--out", default=None,
                     help="ledger path (default SPILL.json at repo root)")
-    # parse_known_args: positionals may interleave with the optionals
+    # positionals may interleave with the optionals
     # ("sf_dir --mode force q1 q2" is a natural call shape)
-    args, extra = ap.parse_known_args()
-    bad = [a for a in extra if a.startswith("-")]
-    if bad:
-        ap.error(f"unrecognized option(s): {' '.join(bad)}")
-    args.targets = list(args.targets) + extra
+    args = ap.parse_intermixed_args()
     args.sf_dir = "/root/testdata/sf0.1"
     args.queries = list(args.targets)
     if args.queries and os.path.isdir(args.queries[0]):
@@ -186,6 +134,7 @@ def main() -> int:
     import duckdb
 
     import __spark_entry__ as e
+    from hadoop_data_pipeline_spark.profile import profile
     from hadoop_data_pipeline_spark.session import get_session
     from tools.oracle_check import TABLES, compare
 
@@ -205,13 +154,18 @@ def main() -> int:
     failed: list[str] = []
     for name in names:
         spark.catalog.clearCache()
+        pdfs = []
         try:
-            pdf, mets = run_with_metrics(spark, qs[name], args.sf_dir)
+            rec = profile(spark, lambda: qs[name](spark, args.sf_dir),
+                          action=lambda df: pdfs.append(df.toPandas()))
         except Exception as ex:  # noqa: BLE001
             print(f"FAIL  {name}: spark raised "
                   f"{type(ex).__name__}: {str(ex)[:200]}")
             failed.append(name)
             continue
+        pdf = pdfs[0]
+        mets = {k: rec[k] for k in ("spill_bytes", "shuffle_bytes",
+                                    "scan_bytes", "fallback_tasks")}
         if name in oracles:
             ddf = con.execute(oracles[name]).df()
             problems = compare(pdf, ddf, strict=True)

@@ -1,6 +1,6 @@
 """Per-task straggler audit under the hot-key stress corpus.
 
-Byte metrics (tools/metrics_audit.py) and planned-scan counts
+Byte metrics (tools/profile_queries.py) and planned-scan counts
 (tools/scan_audit.py) are blind to the ONE scale killer the r12
 verdict said no audit could see: the curse of the last reducer. A
 stage whose bytes and plan are perfect can still serialize on a
@@ -55,10 +55,14 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from hadoop_data_pipeline_spark.profile import (  # noqa: E402
+    profile_catalog,
+    task_summary,
+)
 
 DEFAULT_RATIO = 6.0
 FLOOR_MS = 400  #: stages whose slowest task is under this are immaterial
@@ -140,38 +144,17 @@ BUCKET_BOUNDS: dict[str, int] = {
 }
 
 
-def stage_task_summaries(spark, job_group: str) -> dict[int, dict]:
-    """Per-stage task-duration quantiles + total executor runtime for
-    every stage of the jobs in ``job_group``, via AppStatusStore
-    (works with spark.ui.enabled=false; the store is always live)."""
-    tracker = spark.sparkContext.statusTracker()
-    store = spark.sparkContext._jsc.sc().statusStore()
-    gw = spark.sparkContext._gateway
-    quantiles = gw.new_array(gw.jvm.double, 2)
-    quantiles[0], quantiles[1] = 0.5, 1.0
-    no_quantiles = gw.new_array(gw.jvm.double, 0)
-    empty_statuses = gw.jvm.java.util.ArrayList()
+def stage_shapes(spark, stage_ids) -> dict[int, dict]:
+    """Task-duration median and max plus total executor runtime of each
+    profiled stage, from the AppStatusStore (live with the UI off)."""
     out: dict[int, dict] = {}
-    stage_ids: set[int] = set()
-    for job_id in tracker.getJobIdsForGroup(job_group):
-        info = tracker.getJobInfo(job_id)
-        if info:
-            stage_ids.update(info.stageIds)
-    for sid in sorted(stage_ids):
-        opt = store.taskSummary(sid, 0, quantiles)
-        if not opt.isDefined():
-            continue  # skipped / reused stage — no tasks ran
-        dur = opt.get().duration()
-        med_ms, max_ms = float(dur.apply(0)), float(dur.apply(1))
-        n_tasks, total_ms = 0, 0.0
-        sd = store.stageData(sid, False, empty_statuses, False, no_quantiles)
-        for i in range(sd.size()):
-            s = sd.apply(i)
-            if s.attemptId() == 0:
-                n_tasks = int(s.numCompleteTasks())
-                total_ms = float(s.executorRunTime())
+    for sid in stage_ids:
+        s = task_summary(spark, sid, (0.5, 1.0))
+        if s is None:
+            continue  # attempt 0 ran no task
+        (med_ms, max_ms), total_ms = s["durations_ms"], s["run_ms"]
         out[sid] = {
-            "tasks": n_tasks,
+            "tasks": s["tasks"],
             "med_ms": round(med_ms, 1),
             "max_ms": round(max_ms, 1),
             "total_ms": round(total_ms, 1),
@@ -182,28 +165,16 @@ def stage_task_summaries(spark, job_group: str) -> dict[int, dict]:
 
 
 def audit(spark, names: list[str], corpus: str) -> tuple[dict, list[str]]:
-    from hadoop_data_pipeline_spark import queries_catalog as qc
-
     results: dict[str, dict] = {}
     failures: list[str] = []
     for name in names:
-        fn = qc.QUERIES.get(name)
-        if fn is None:
-            failures.append(f"{name}: not in catalog (renamed?)")
+        # one query at a time, so its stages are read while retained
+        records, failed = profile_catalog(spark, [name], corpus, reps=1)
+        if failed:
+            failures.append(f"{name}: query failed or not in catalog")
             continue
-        spark.catalog.clearCache()
-        group = f"skew_audit_{name}"
-        spark.sparkContext.setJobGroup(group, name)
-        t0 = time.perf_counter()
-        try:
-            fn(spark, corpus).write.format("noop").mode("overwrite").save()
-        except Exception as ex:  # noqa: BLE001
-            failures.append(f"{name}: query failed: {ex}")
-            continue
-        finally:
-            spark.sparkContext.setJobGroup(None, None)
-        wall = round(time.perf_counter() - t0, 2)
-        stages = stage_task_summaries(spark, group)
+        wall = round(records[name]["secs"][0], 2)
+        stages = stage_shapes(spark, records[name]["stage_ids"])
         law, bound, why = SKEW_BUDGETS.get(
             name, ("ratio", DEFAULT_RATIO, "default")
         )
