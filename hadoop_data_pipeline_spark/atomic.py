@@ -28,7 +28,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 
 from hadoop_data_pipeline_spark.fs import FS
 from hadoop_data_pipeline_spark.retry import with_retry
@@ -80,6 +80,7 @@ def atomic_write_partition(
     update_metastore: Callable[[str], None] | None = None,
     max_retries: int | None = None,
     sleep: Callable[[float], None] | None = None,
+    observe: dict[str, Column] | None = None,
 ) -> str:
     """Atomically overwrite one partition directory of a parquet table.
 
@@ -90,6 +91,11 @@ def atomic_write_partition(
     e.g. ``lambda p: spark.sql(f"ALTER TABLE t PARTITION ({partition_col}=
     {partition_value}) SET LOCATION '{p}'")`` when a metastore fronts
     the table.
+
+    ``observe`` maps names to aggregate Columns evaluated as the write
+    scans ``df`` (no extra job); on return each name holds the value the
+    attempt that succeeded observed. Each attempt observes afresh: a
+    failed attempt completes its Observation with partial values.
     """
     if partition_col in df.columns:
         df = df.drop(partition_col)
@@ -98,10 +104,15 @@ def atomic_write_partition(
     tmp_path = f"{partition_path}_tmp"
 
     def _do_write() -> None:
-        df.write.mode("overwrite").parquet(tmp_path)
+        out, seen = df, Observation()
+        if observe:
+            out = df.observe(seen, *[c.alias(k) for k, c in observe.items()])
+        out.write.mode("overwrite").parquet(tmp_path)
         swap_directory(fs, tmp_path, partition_path)
         if update_metastore is not None:
             update_metastore(partition_path)
+        if observe:
+            observe.update(seen.get)
 
     kwargs: dict[str, Any] = {"label": f"atomic write {partition_path}"}
     if max_retries is not None:

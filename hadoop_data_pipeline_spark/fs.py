@@ -45,16 +45,25 @@ class FS:
         return bool(self._fs(p).exists(self._path(p)))
 
     def _statuses(self, p: str, recursive: bool):
-        """``LocatedFileStatus`` stream under ``p``; a missing path
-        yields nothing (reference ``jobs/utils/hdfs.py:15-26``
-        behavior)."""
+        """``FileStatus`` of every file under ``p``, depth first in
+        listing order; a missing path yields nothing (reference
+        ``jobs/utils/hdfs.py:15-26`` behavior), a file path yields
+        itself. A walk over ``listStatus``, not ``listFiles``: the
+        latter's ``LocatedFileStatus`` fetches block locations no caller
+        reads, and both make one RPC per directory."""
         fs = self._fs(p)
         path = self._path(p)
         if not fs.exists(path):
             return
-        it = fs.listFiles(path, recursive)
-        while it.hasNext():
-            yield it.next()
+        todo = [iter(fs.listStatus(path))]
+        while todo:
+            st = next(todo[-1], None)
+            if st is None:
+                todo.pop()
+            elif not st.isDirectory():
+                yield st
+            elif recursive:
+                todo.append(iter(fs.listStatus(st.getPath())))
 
     def list_files(self, p: str, recursive: bool = True) -> list[str]:
         """Recursive listing (S5). Missing path -> []."""
@@ -65,10 +74,9 @@ class FS:
     ) -> list[tuple[str, int]]:
         """Recursive listing with byte sizes — the scheme-agnostic way
         to size a table directory (``glob``/``os.path.getsize`` only
-        work on the local FS; this uses the same ``LocatedFileStatus``
-        stream as :meth:`list_files`, so it works on ``hdfs://``,
-        ``s3a://`` etc. with one RPC batch per listing page). Missing
-        path -> []."""
+        work on the local FS; this walks the same ``FileStatus`` tree as
+        :meth:`list_files`, so it works on ``hdfs://``, ``s3a://`` etc.
+        with one RPC per directory). Missing path -> []."""
         return [
             (st.getPath().toString(), int(st.getLen()))
             for st in self._statuses(p, recursive)

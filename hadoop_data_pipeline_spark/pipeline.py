@@ -14,11 +14,22 @@ checkpointed file-source offsets lives in ``streaming/`` — same
 transformations, checkpoint instead of markers.
 
 Scale notes: discovery is a control-plane listing (driver RPCs, not
-data). Each year's batch is one DataFrame job chain — reading N years
-concurrently is embarrassingly parallel across scheduler pools if
-needed. The unpivot is an Expand (narrow, no shuffle); the only
-shuffle on the whole path is the optional pre-write repartition to
-align files with partitions.
+data). A year that passes its gate runs six Spark jobs:
+
+* read: 1 (the CSV header; every column is read as a string and
+  :func:`normalize_wide` casts);
+* DQ gate: 2 (one aggregate, whose partial and final stages AQE runs as
+  two jobs; it also counts the wide rows);
+* the wide write, the snapshot write and the long write: 1 each. The
+  snapshot's row count and checksum and the long row count are observed
+  on those writes, not recounted, and the long step re-reads the wide
+  partition with its known schema (no footer job).
+
+A year the gate rejects stops after the gate (plus one sample fetch per
+failed date-format or total-vs-sum check). Years are independent, so
+reading N years concurrently is embarrassingly parallel across
+scheduler pools if needed. The unpivot is an Expand (narrow, no
+shuffle); the DQ aggregate's is the only shuffle on the path.
 """
 
 from __future__ import annotations
@@ -73,11 +84,14 @@ def normalize_wide(
     """P1/P2: id columns -> string, everything else -> double, inject
     the ``year`` int (reference ``finance_itsc_pipeline.py:63-68``).
     Single projection — not a per-column ``withColumn`` loop, which
-    would build a 35-deep plan for Catalyst to collapse."""
+    would build a 35-deep plan for Catalyst to collapse. A measure that
+    does not parse (``n/a``) becomes null, as in the reference's
+    non-ANSI cast, instead of failing the year under ANSI mode; the DQ
+    gate's total-vs-sum check then warns about its row."""
     cols = [
         F.col(c).cast("string").alias(c)
         if c in id_columns
-        else F.col(c).cast("double").alias(c)
+        else F.col(c).try_cast("double").alias(c)
         for c in df.columns
     ]
     return df.select(*cols, F.lit(year).cast("int").alias("year"))
@@ -163,12 +177,14 @@ class IncrementalPipeline:
         return group_by_year(pending_files(self.fs.list_files(self.raw_root)))
 
     def read_year(self, files: list[str], year: int) -> DataFrame:
+        """Without an explicit schema every column is read as a string
+        (one job, for the header): :func:`normalize_wide` casts anyway,
+        and inference would cost a second pass and turn a month-only
+        file's ``date`` into a timestamp."""
         reader = self.spark.read.option("header", "true")
         if self.schema is not None:
-            df = reader.schema(self.schema).csv(files)
-        else:
-            df = reader.option("inferSchema", "true").csv(files)
-        return normalize_wide(df, year)
+            reader = reader.schema(self.schema)
+        return normalize_wide(reader.csv(files), year)
 
     def _mark(self, files: list[str], suffix: str) -> None:
         for f in files:
@@ -189,7 +205,6 @@ class IncrementalPipeline:
             return YearResult(year, files, False, report)
 
         atomic_write_partition(df, self.wide_path, "year", year)
-        wide_rows = df.count()
         version_id = None
         if self.versioner is not None:
             version_id = self.versioner.create_version(
@@ -197,16 +212,17 @@ class IncrementalPipeline:
             )
             self.versioner.cleanup_old_versions(year)
 
-        long_df = wide_to_long(
-            self.spark.read.parquet(f"{self.wide_path}/year={year}").withColumn(
-                "year", F.lit(year)
-            )
+        wide = self.spark.read.schema(df.drop("year").schema).parquet(
+            f"{self.wide_path}/year={year}"
         )
-        atomic_write_partition(long_df, self.long_path, "year", year)
-        long_rows = long_df.count()
+        seen = {"rows": F.count(F.lit(1))}
+        atomic_write_partition(
+            wide_to_long(wide.withColumn("year", F.lit(year))),
+            self.long_path, "year", year, observe=seen,
+        )
         self._mark(files, ".done")
         return YearResult(
-            year, files, True, report, wide_rows, long_rows, version_id
+            year, files, True, report, report.rows, seen["rows"], version_id
         )
 
     def run(self, parallel_years: int = 1) -> PipelineResult:

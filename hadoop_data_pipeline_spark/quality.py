@@ -6,11 +6,13 @@ same fatal/warn severities and pass/fail semantics, re-expressed as
 
 * The reference `collect()`s every distinct date to the driver and
   does a driver-side adjacent-pair loop for the monotonic check
-  (``jobs/data_quality.py:56,95-101``) — fine at 10^3 rows, fatal at
-  100 TB. Here both become single aggregate / window jobs; the driver
-  only ever receives counts and <=3 sample rows per check.
-* Null counts for all checked columns are computed in ONE aggregate
-  pass instead of one filter-count job per column.
+  (``jobs/data_quality.py:56,95-101``). Here the ``remaining`` run is
+  sorted inside the aggregate and its adjacent pairs compared there;
+  the driver only ever receives counts and <=3 sample rows per check.
+* :func:`run_quality_checks` computes every check's metric, plus the
+  row count, in ONE aggregate (two jobs under AQE: the partial
+  aggregate's stage and the final one). A failed date-format or
+  total-vs-sum check adds one bounded sample fetch each.
 
 Severity contract (reference ``README.md:237-245``): schema-missing,
 nulls in id columns, and bad date format are FATAL (block the load);
@@ -22,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 MONTH_RE = r"^\d{4}-\d{2}$"
@@ -45,6 +47,7 @@ class CheckResult:
 @dataclass
 class QualityReport:
     results: list[CheckResult] = field(default_factory=list)
+    rows: int = 0  #: rows the gate scanned
 
     @property
     def passed(self) -> bool:
@@ -102,6 +105,12 @@ def check_nulls(df: DataFrame, columns: list[str] = ID_COLUMNS) -> CheckResult:
     return CheckResult("nulls", "fatal", not messages, messages)
 
 
+def _valid_date(d: Column, sentinels=REQUIRED_SENTINELS) -> Column:
+    return d.rlike(MONTH_RE) | F.array_contains(
+        F.array(*[F.lit(x) for x in sentinels]), d
+    )
+
+
 def check_date_format(
     df: DataFrame,
     date_col: str = "date",
@@ -110,9 +119,8 @@ def check_date_format(
     """Every date is a ``YYYY-MM`` month key or a known sentinel, and
     all required sentinels are present — one aggregate job (the
     reference collects all distinct dates to the driver)."""
-    sentinels = F.array(*[F.lit(s) for s in required_sentinels])
     d = F.col(date_col)
-    valid = d.rlike(MONTH_RE) | F.array_contains(sentinels, d)
+    valid = _valid_date(d, required_sentinels)
     agg = df.agg(
         F.sum((~valid).cast("long")).alias("n_invalid"),
         *[
@@ -168,35 +176,51 @@ def check_total_vs_sum(
     return CheckResult("total_vs_sum", "warn", not messages, messages)
 
 
+def _remaining_run(date_col: str = "date") -> Column:
+    """The reference's monotonic scope: ``remaining`` rows at month keys."""
+    return (F.col("details") == "remaining") & F.col(date_col).rlike(MONTH_RE)
+
+
+def _increases(value_col: str, order_col: str, where: Column) -> Column:
+    """Aggregate expression: the first <=3 adjacent pairs ``(a, b)`` of
+    the ``where`` rows, sorted by ``(order_col, value_col)``, whose
+    value increases. Each side is a ``(k, v)`` struct. A null value
+    compares as neither side of an increase (as a ``lag`` window
+    would); equal keys sort by value ascending, so a month repeated
+    with two totals reports an increase."""
+    run = F.array_sort(F.collect_list(F.when(where, F.struct(
+        F.col(order_col).alias("k"), F.col(value_col).alias("v")))))
+    # slice(run, 2, size) is empty, not an error, on an empty run; the
+    # last pair's b is null and drops out of the filter
+    pairs = F.zip_with(run, F.slice(run, 2, F.size(run)),
+                       lambda a, b: F.struct(a.alias("a"), b.alias("b")))
+    return F.slice(F.filter(pairs, lambda p: p["b"]["v"] > p["a"]["v"]), 1, 3)
+
+
+def _monotonic_result(pairs, value_col: str) -> CheckResult:
+    messages = [
+        f"{value_col} increased at {p['b']['k']}: "
+        f"{p['a']['v']:.0f} -> {p['b']['v']:.0f}"
+        for p in pairs
+    ]
+    return CheckResult("monotonic", "warn", not messages, messages)
+
+
 def check_monotonic_non_increasing(
     df: DataFrame,
     value_col: str = TOTAL_COLUMN,
     order_col: str = "date",
-    where=None,
-    partition_cols: list[str] | None = None,
+    where: Column | None = None,
 ) -> CheckResult:
     """WARN: ``value_col`` never increases along ``order_col`` — the
-    reference's remaining-balance invariant, as a lag window instead of
-    a driver-side pairwise loop (SURVEY.md §2.7 O1).
+    reference's remaining-balance invariant, as one aggregate instead
+    of a driver-side pairwise loop (SURVEY.md §2.7 O1).
 
     Default scope matches the reference: rows where
     ``details = 'remaining'`` and the date is a month key."""
-    if where is None:
-        where = (F.col("details") == "remaining") & F.col(order_col).rlike(MONTH_RE)
-    w = Window.partitionBy(*(partition_cols or [])).orderBy(order_col)
-    prev = F.lag(value_col).over(w)
-    viol = (
-        df.where(where)
-        .select(order_col, F.col(value_col), prev.alias("__prev"))
-        .where(F.col("__prev").isNotNull() & (F.col(value_col) > F.col("__prev")))
-    )
-    samples = viol.orderBy(order_col).limit(3).collect()
-    messages = [
-        f"{value_col} increased at {r[order_col]}: "
-        f"{r['__prev']:.0f} -> {r[value_col]:.0f}"
-        for r in samples
-    ]
-    return CheckResult("monotonic", "warn", not messages, messages)
+    where = _remaining_run(order_col) if where is None else where
+    pairs = df.agg(_increases(value_col, order_col, where)).collect()[0][0]
+    return _monotonic_result(pairs, value_col)
 
 
 def check_domain(
@@ -227,54 +251,36 @@ def run_quality_checks(
     df: DataFrame,
     expected_columns: list[str],
     measure_columns: list[str] | None = None,
-    combined: bool = True,
 ) -> QualityReport:
     """The reference's five-check gate in order (schema, nulls, date
-    format, total-vs-sum, remaining-monotonic).
+    format, total-vs-sum, remaining-monotonic), plus the row count.
 
-    ``combined=True`` (default) computes every row-local check metric
-    in ONE aggregate pass over the table — at 100 TB each separate
-    check action is its own full scan, so the combined form turns
-    ~5 scans into 1 aggregate + 1 window job, fetching bounded samples
-    only for checks that actually failed."""
+    Every check's metric comes from ONE aggregate over the table — at
+    100 TB each separate check action is its own full scan — fetching
+    bounded samples only for checks that actually failed. The results
+    equal the ``check_*`` functions run one by one."""
     measures = measure_columns or [
         c
         for c in expected_columns
         if c not in (*ID_COLUMNS, TOTAL_COLUMN)
     ]
-    if combined:
-        return _run_combined(df, expected_columns, measures)
-    report = QualityReport()
-    report.results.append(check_schema(df, expected_columns))
-    report.results.append(check_nulls(df))
-    if "date" in df.columns:
-        report.results.append(check_date_format(df))
-        report.results.append(check_total_vs_sum(df, measures))
-        if "details" in df.columns and TOTAL_COLUMN in df.columns:
-            report.results.append(check_monotonic_non_increasing(df))
-    return report
-
-
-def _run_combined(
-    df: DataFrame, expected_columns: list[str], measures: list[str]
-) -> QualityReport:
-    """Single-pass metric collection for all row-local checks."""
     report = QualityReport()
     report.results.append(check_schema(df, expected_columns))
 
     null_cols = [c for c in ID_COLUMNS if c in df.columns]
-    aggs = [
+    aggs = [F.count(F.lit(1)).alias("__rows")] + [
         F.sum(F.col(c).isNull().cast("long")).alias(f"__null_{c}")
         for c in null_cols
     ]
     has_date = "date" in df.columns
     present_measures = [c for c in measures if c in df.columns]
     do_total = has_date and TOTAL_COLUMN in df.columns and present_measures
+    do_monotonic = (
+        has_date and "details" in df.columns and TOTAL_COLUMN in df.columns
+    )
     if has_date:
         d = F.col("date")
-        sentinels = F.array(*[F.lit(s) for s in REQUIRED_SENTINELS])
-        valid = d.rlike(MONTH_RE) | F.array_contains(sentinels, d)
-        aggs.append(F.sum((~valid).cast("long")).alias("__n_bad_date"))
+        aggs.append(F.sum((~_valid_date(d)).cast("long")).alias("__n_bad_date"))
         aggs += [
             F.max((d == F.lit(s)).cast("int")).alias(f"__has_{i}")
             for i, s in enumerate(REQUIRED_SENTINELS)
@@ -290,9 +296,14 @@ def _run_combined(
                 > F.col(TOTAL_COLUMN) * 0.01
             )
             aggs.append(F.sum(mismatch.cast("long")).alias("__n_total_bad"))
-    if not aggs:
-        return report
+        if do_monotonic:
+            aggs.append(
+                _increases(TOTAL_COLUMN, "date", _remaining_run()).alias(
+                    "__increases"
+                )
+            )
     m = df.agg(*aggs).collect()[0]
+    report.rows = m["__rows"]
 
     null_msgs = [
         f"Column '{c}' has {m[f'__null_{c}']} null rows"
@@ -311,10 +322,8 @@ def _run_combined(
         if missing:
             msgs.append(f"Missing required rows: {missing}")
         if m["__n_bad_date"]:
-            d = F.col("date")
-            sentinels = F.array(*[F.lit(s) for s in REQUIRED_SENTINELS])
-            valid = d.rlike(MONTH_RE) | F.array_contains(sentinels, d)
-            samples = [r[0] for r in df.where(~valid).select("date").limit(3).collect()]
+            bad = df.where(~_valid_date(F.col("date"))).select("date")
+            samples = [r[0] for r in bad.limit(3).collect()]
             msgs.append(
                 f"Invalid date format ({m['__n_bad_date']} rows): {samples}"
             )
@@ -327,8 +336,10 @@ def _run_combined(
                 report.results.append(check_total_vs_sum(df, present_measures))
             else:
                 report.results.append(CheckResult("total_vs_sum", "warn", True))
-        if "details" in df.columns and TOTAL_COLUMN in df.columns:
-            report.results.append(check_monotonic_non_increasing(df))
+        if do_monotonic:
+            report.results.append(
+                _monotonic_result(m["__increases"], TOTAL_COLUMN)
+            )
     return report
 
 

@@ -10,11 +10,14 @@ keep_versions) and the same keep-N-newest retention.
 Improvements over the reference:
 
 * The checksum is a **distributed, order-insensitive content hash**:
-  the sum of a per-row 28-bit md5 hash, computed as one aggregate over
-  the executors. The reference falls back to md5(path+now) when
-  ``getFileChecksum`` is unavailable — i.e. a random value; ours is a
-  real content fingerprint that is stable across file layouts and
-  partition counts, so restore verification is meaningful.
+  the sum of a per-row 28-bit md5 hash (:func:`row_hash`). The
+  snapshot write observes it and the row count as it writes, so a
+  snapshot is exactly one Spark job; restore recomputes it as one
+  aggregate over the snapshot it reads. The reference falls back to
+  md5(path+now) when ``getFileChecksum`` is unavailable — i.e. a
+  random value; ours is a real content fingerprint that is stable
+  across file layouts and partition counts, so restore verification is
+  meaningful.
 * ``version_id``/clock are injectable -> deterministic tests.
 * Restore goes through the same atomic swap as production writes.
 
@@ -29,7 +32,7 @@ import json
 from datetime import datetime, timezone
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from hadoop_data_pipeline_spark.atomic import atomic_write_partition
@@ -38,10 +41,9 @@ from hadoop_data_pipeline_spark.fs import FS
 KEEP_VERSIONS = 5  # reference retention default (versioning.py:35)
 
 
-def content_checksum(df: DataFrame) -> str:
-    """Order-insensitive distributed content hash: per-row md5 over the
-    concatenated values (null-tagged), truncated to 28 bits, summed.
-    One aggregate job; no data to the driver beyond a single number."""
+def row_hash(df: DataFrame) -> Column:
+    """Per-row md5 over the concatenated values (null-tagged),
+    truncated to 28 bits; its sum is the content checksum."""
     # Each column is coalesced onto an explicit NULL sentinel BEFORE
     # concat_ws (which silently skips NULLs): rows differing only in
     # WHICH column is null, e.g. ('a', NULL, 'b') vs ('a', 'b', NULL),
@@ -51,13 +53,22 @@ def content_checksum(df: DataFrame) -> str:
         F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL\x00"))
         for c in df.columns
     ]
-    row_hash = F.conv(
+    return F.conv(
         F.substring(F.md5(F.concat_ws("\x1f", *tagged)), 1, 7),
         16,
         10,
     ).cast("bigint")
-    total = df.select(F.sum(row_hash).alias("s")).collect()[0]["s"]
+
+
+def _hex(total) -> str:
     return format(int(total or 0), "x")
+
+
+def content_checksum(df: DataFrame) -> str:
+    """Order-insensitive distributed content hash: the sum of
+    :func:`row_hash`. One aggregate job; no data to the driver beyond
+    a single number."""
+    return _hex(df.select(F.sum(row_hash(df))).collect()[0][0])
 
 
 class Versioner:
@@ -84,14 +95,20 @@ class Versioner:
         ts = now or datetime.now(timezone.utc)
         vid = version_id or ts.strftime("v_%Y%m%d_%H%M%S")
         vdir = self._version_dir(year, vid)
-        df.write.mode("overwrite").parquet(vdir)
+        seen = Observation()
+        df.observe(
+            seen,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(row_hash(df)).alias("checksum"),
+        ).write.mode("overwrite").parquet(vdir)
+        metrics = seen.get
         manifest: dict[str, Any] = {
             "version": vid,
             "source_file": source_file.rsplit("/", 1)[-1],
             "year": year,
             "timestamp": ts.isoformat(),
-            "row_count": df.count(),
-            "checksum": content_checksum(df),
+            "row_count": metrics["rows"],
+            "checksum": _hex(metrics["checksum"]),
             "columns": df.columns,
             "keep_versions": self.keep,
         }

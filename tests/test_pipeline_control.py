@@ -7,10 +7,12 @@ filesystem semantics."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from hadoop_data_pipeline_spark import atomic, pipeline, quality, retry
+from hadoop_data_pipeline_spark import atomic, pipeline, profile, quality, retry
 from hadoop_data_pipeline_spark.fs import FS, extract_year_from_path
 from hadoop_data_pipeline_spark.versioning import Versioner, content_checksum
 
@@ -459,8 +461,18 @@ def test_pipeline_reprocess_after_failed_marker_removed(spark, tmp_path):
 
 
 def test_quality_combined_equals_separate(spark):
-    # The single-pass gate and the per-check gate agree on every
-    # severity/pass/message outcome for good and bad inputs.
+    # The single-pass gate and the public per-check functions agree on
+    # every check's severity, outcome and messages for good and bad
+    # inputs, and the gate counts the rows it scanned.
+    # A month repeated with two totals: ties sort by total ascending.
+    tie = _good_rows() + [("2024-02", 60.0, "remaining", 20.0, 20.0, 20.0)]
+    # A null total inside the remaining run: 54, null, 60.
+    null_run = [
+        (d, None, det, *ms) if (d, det) == ("2024-02", "remaining")
+        else (d, 60.0, det, *ms) if (d, det) == ("2024-03", "remaining")
+        else (d, t, det, *ms)
+        for d, t, det, *ms in _good_rows()
+    ]
     cases = [
         _good_rows(),
         _good_rows() + [(None, 1.0, "spent", 1.0, 0.0, 0.0)],
@@ -468,14 +480,25 @@ def test_quality_combined_equals_separate(spark):
         _good_rows() + [("2024-04", 100.0, "spent", 1.0, 1.0, 1.0)],
         _good_rows() + [("2024-04", 999.0, "remaining", 333.0, 333.0, 333.0)],
         [r for r in _good_rows() if r[0] != "all-year-budget"],
+        tie,
+        null_run,
     ]
+    gates = []
     for rows in cases:
         df = _wide_df(spark, rows)
-        combined = quality.run_quality_checks(df, WIDE_COLS, combined=True)
-        separate = quality.run_quality_checks(df, WIDE_COLS, combined=False)
-        assert combined.passed == separate.passed
-        assert combined.errors == separate.errors
-        assert combined.warnings == separate.warnings
+        gates.append(quality.run_quality_checks(df, WIDE_COLS))
+        assert gates[-1].results == [
+            quality.check_schema(df, WIDE_COLS),
+            quality.check_nulls(df),
+            quality.check_date_format(df),
+            quality.check_total_vs_sum(df, ["m1", "m2", "m3"]),
+            quality.check_monotonic_non_increasing(df),
+        ]
+        assert gates[-1].rows == len(rows)
+    # the tie reads as an increase; a null total is neither side of one,
+    # as with a lag window
+    assert gates[-2].warnings == ["total_amount increased at 2024-02: 48 -> 60"]
+    assert not any("increased" in w for w in gates[-1].warnings)
 
 
 def test_pipeline_parallel_years(spark, tmp_path):
@@ -504,3 +527,148 @@ def test_check_domain(spark):
         _wide_df(spark, _good_rows()), "details", ("budget", "spent", "remaining")
     )
     assert ok.passed
+
+
+# ---------------------------------------------------------------------------
+# Job budget and observed counts of run_year
+# ---------------------------------------------------------------------------
+
+
+def _pipe(spark, tmp_path, **kw):
+    return pipeline.IncrementalPipeline(
+        spark,
+        raw_root=str(tmp_path / "raw"),
+        wide_path=str(tmp_path / "staging"),
+        long_path=str(tmp_path / "curated"),
+        versions_root=str(tmp_path / "versions"),
+        expected_columns=WIDE_COLS,
+        **kw,
+    )
+
+
+def _year_jobs(spark, p, year):
+    """Spark jobs one ``run_year`` of the single pending ``year`` runs."""
+    out = {}
+    files = p.discover()[year]
+    rec = profile.profile(
+        spark, lambda: None,
+        action=lambda _: out.setdefault("r", p.run_year(year, files)),
+    )
+    return rec["jobs"], out["r"]
+
+
+def test_run_year_job_budget(spark, tmp_path):
+    # read 1 + DQ aggregate 2 + wide, snapshot and long writes 1 each;
+    # a rejected year stops after the gate and its sample fetch.
+    _write_csv(tmp_path, 2024, "a.csv", _good_rows()[:4])
+    _write_csv(tmp_path, 2024, "b.csv", _good_rows()[4:])
+    _write_csv(tmp_path, 2023, "bad.csv",
+               _good_rows() + [("01/2023", 1.0, "spent", 1.0, 0.0, 0.0)])
+    p = _pipe(spark, tmp_path)
+    jobs, res = _year_jobs(spark, p, 2024)
+    assert res.passed and (res.wide_rows, res.long_rows) == (9, 21)
+    assert jobs <= 6
+    jobs, res = _year_jobs(spark, p, 2023)
+    assert not res.passed
+    assert jobs <= 4
+
+
+def test_snapshot_manifest_matches_reread(spark, tmp_path):
+    rows = _good_rows() + [("2024-04", 6.0, "spent", None, 2.0, 4.0)]
+    _write_csv(tmp_path, 2024, "f.csv", rows)
+    p = _pipe(spark, tmp_path)
+    (res,) = p.run().years
+    (manifest,) = p.versioner.list_versions(2024)
+    snap = spark.read.parquet(str(tmp_path / "versions" / "year=2024" / res.version_id))
+    assert manifest["row_count"] == snap.count() == res.wide_rows == len(rows)
+    assert manifest["checksum"] == content_checksum(snap)
+    assert manifest["columns"] == snap.columns
+
+
+def test_long_rows_observed_on_the_attempt_that_succeeded(spark, tmp_path, monkeypatch):
+    # The first long write fails mid-job; a failed attempt completes its
+    # Observation with partial counts, so the retry must observe afresh.
+    _write_csv(tmp_path, 2024, "f.csv", _good_rows())
+    flag = str(tmp_path / "failed_once")
+
+    @F.udf("boolean")
+    def fail_once(_):
+        if not os.path.exists(flag):
+            open(flag, "w").close()
+            raise RuntimeError("first long write attempt fails")
+        return True
+
+    to_long = pipeline.wide_to_long
+
+    def flaky_long(df):
+        out = to_long(df)
+        return out.where(fail_once(out["amount"]))
+
+    monkeypatch.setattr(pipeline, "wide_to_long", flaky_long)
+    monkeypatch.setattr(retry, "DEFAULT_RETRY_DELAY", 0)
+    (res,) = _pipe(spark, tmp_path).run().years
+    assert os.path.exists(flag)
+    assert res.passed and res.long_rows == 21
+    assert spark.read.parquet(str(tmp_path / "curated" / "year=2024")).count() == 21
+
+
+def test_non_numeric_amount_warns_not_kills(spark, tmp_path):
+    # Under ANSI a plain cast of 'n/a' to double raises; the measure
+    # becomes null instead, and total-vs-sum notes the row.
+    rows = [
+        (d, t, det, "n/a", *ms) if (d, det) == ("2024-02", "spent")
+        else (d, t, det, m1, *ms)
+        for d, t, det, m1, *ms in _good_rows()
+    ]
+    _write_csv(tmp_path, 2024, "f.csv", rows)
+    _write_csv(tmp_path, 2025, "f.csv", _good_rows())
+    result = _pipe(spark, tmp_path).run()
+    assert result.processed == [2024, 2025]
+    warns = result.years[0].report.warnings
+    assert warns == ["total_amount mismatch at 2024-02/spent: total=6, computed=5"]
+    assert result.years[0].long_rows == 20
+
+
+def test_month_only_file_reports_only_missing_sentinels(spark, tmp_path):
+    # Schema inference would read '2024-01' as a timestamp and report
+    # an invalid date format on top of the missing sentinels.
+    months = [r for r in _good_rows() if r[0].startswith("2024-")]
+    _write_csv(tmp_path, 2024, "f.csv", months)
+    (res,) = _pipe(spark, tmp_path).run().years
+    assert not res.passed
+    assert len(res.report.errors) == 1
+    assert res.report.errors[0].startswith("Missing required rows")
+
+
+def _list_files_reference(fs, root, recursive=True):
+    """What ``FileSystem.listFiles`` returns, as (path, size)."""
+    it = fs._fs(root).listFiles(fs._path(root), recursive)
+    out = []
+    while it.hasNext():
+        st = it.next()
+        out.append((st.getPath().toString(), int(st.getLen())))
+    return out
+
+
+def test_fs_listing_matches_list_files(spark, tmp_path):
+    fs = FS(spark)
+    root = str(tmp_path / "zone")
+    for i, rel in enumerate([
+        "top.csv", "year=2023/a.csv", "year=2023/a.csv.done",
+        "year=2024/sub/deep/x.bin", "year=2024/b.csv", "year=2024/sub/y.txt",
+    ]):
+        fs.write_text(f"{root}/{rel}", "x" * i)
+    fs.mkdirs(root + "/empty/dir")
+    ref = _list_files_reference(fs, root)
+    assert len(ref) == 6
+    assert fs.list_file_sizes(root) == ref
+    assert fs.list_files(root) == [p for p, _ in ref]
+    flat = _list_files_reference(fs, root, recursive=False)
+    assert [p for p, _ in flat] == [p for p in fs.list_files(root) if p.endswith("top.csv")]
+    assert fs.list_file_sizes(root, recursive=False) == flat
+    one = f"{root}/year=2023/a.csv"
+    assert fs.list_file_sizes(one) == _list_files_reference(fs, one) == [
+        ("file:" + one, 1)
+    ]
+    assert fs.list_files(root + "/missing") == []
+    assert fs.list_file_sizes(root + "/missing", recursive=False) == []
