@@ -17,20 +17,113 @@ clearly-marked deterministic fake (byte-level stats standing in for
 pixel stats) for payloads that are not images at all.
 
 Scale notes: payload columns are large — never groupBy/shuffle the
-payload itself. Feature extraction is ``mapInPandas`` (per-partition
-Arrow batches, zero shuffle); anything relational happens on the
-extracted features or metadata, never the bytes.
+payload itself. Every per-row kernel (render, decode, resize,
+decimate, signature, feature extraction) runs through
+:func:`_map_rows`, the package's one ``mapInPandas`` boundary
+(per-partition Arrow batches, zero shuffle), which also owns the null
+and error rule; anything relational happens on the extracted features
+or metadata, never the bytes.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator, Sequence
+import hashlib
+import io
+from collections.abc import Callable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from hadoop_data_pipeline_spark.operators import audiocodec as ac
+from hadoop_data_pipeline_spark.operators import imagecodec as ic
+from hadoop_data_pipeline_spark.operators import videocodec as vc
+from hadoop_data_pipeline_spark.operators.queries import scatter_small_scan
+
+#: pandas dtype of a kernel output column, by Spark type. Nullable
+#: ints keep a NULL beside a 64-bit hash from turning the column into
+#: float64 (which silently rounds values above 2**53).
+_PANDAS_DTYPES = {
+    T.LongType: "Int64",
+    T.IntegerType: "Int32",
+    T.DoubleType: "float64",
+}
+
+
+def _map_rows(
+    df: DataFrame,
+    col: str,
+    fn: Callable,
+    schema: T.StructType,
+    *,
+    explode: bool = False,
+) -> DataFrame:
+    """Run ``fn`` on each ``col`` value of ``df`` and emit rows of
+    ``schema`` keyed by ``doc_id`` — the one ``mapInPandas`` call of
+    the package. ``fn(value)`` returns the output fields after the key
+    (and before a trailing ``*_error`` field) as a tuple; with
+    ``explode`` it returns an iterable of such tuples, one output row
+    each. Every kernel shares one null and error rule:
+
+    * **Null input.** ``fn`` is not called. A row kernel emits the key
+      and all NULLs, including a NULL ``*_error``; an explode kernel
+      emits no rows.
+    * **``fn`` raises.** A row kernel emits the key and all NULLs, with
+      ``"<ExceptionType>: <message>"`` (first 200 chars) in the
+      schema's trailing ``*_error`` field if it has one; an explode
+      kernel emits no rows. At corpus scale corrupt payloads are
+      routine: one must never kill a 1000-executor stage, and an error
+      row is never half-filled.
+
+    Output columns take their pandas dtype from the schema
+    (``_PANDAS_DTYPES``). Arrow batches in, batches out, zero shuffle."""
+    names = schema.fieldNames()
+    dtypes = [_PANDAS_DTYPES.get(type(f.dataType), object) for f in schema]
+    width = len(names)
+    nulls = (None,) * (width - 1 - names[-1].endswith("_error"))
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows: list[tuple] = []
+            for key, value in zip(pdf["doc_id"], pdf[col]):
+                # each row tuple ends with the error slot; [:width]
+                # drops it when the schema has no *_error field
+                if value is None:
+                    if not explode:
+                        rows.append((key, *nulls, None)[:width])
+                    continue
+                try:
+                    out = list(fn(value))
+                except Exception as exc:
+                    if not explode:
+                        err = f"{type(exc).__name__}: {exc}"[:200]
+                        rows.append((key, *nulls, err)[:width])
+                    continue
+                if explode:
+                    rows.extend((key, *r) for r in out)
+                else:
+                    rows.append((key, *out, None)[:width])
+            cols = list(zip(*rows)) or [()] * width
+            yield pd.DataFrame(
+                {
+                    name: pd.Series(list(c), dtype=dtype)
+                    for name, c, dtype in zip(names, cols, dtypes)
+                }
+            )
+
+    return df.select("doc_id", col).mapInPandas(kernel, schema)
+
+
+#: Output of the ``attach_*_payload`` renders.
+RENDER_SCHEMA = T.StructType(
+    [
+        T.StructField("doc_id", T.LongType(), False),
+        T.StructField("payload", T.BinaryType(), True),
+    ]
+)
 
 #: Metadata struct carried beside every binary payload.
 MEDIA_META_SCHEMA = T.StructType(
@@ -46,7 +139,7 @@ MEDIA_META_SCHEMA = T.StructType(
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
+        T.StructField("n_bytes", T.LongType(), True),
         T.StructField("byte_mean", T.DoubleType(), True),
         T.StructField("byte_std", T.DoubleType(), True),
         T.StructField("head_hash", T.StringType(), True),
@@ -81,28 +174,16 @@ def attach_ppm_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     text), so the pinned oracle map in ``functions/image_lens.py``
     stays valid at every SF and under key-shifted stress corpora.
 
-    ``mapInPandas`` render: zero shuffle, one pass, ~3 KiB/row out."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import imagecodec as ic
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        ic.render_histogram_image(t) for t in pdf[text_col]
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
+    One pass, zero shuffle, ~3 KiB/row out. Like every render, it
+    expands its input and costs CPU per row, so a small single-split
+    text scan is first scattered to full parallelism
+    (``queries.scatter_small_scan``)."""
+    return _map_rows(
+        scatter_small_scan(df.select("doc_id", text_col)),
+        text_col,
+        lambda text: (ic.render_histogram_image(text),),
+        RENDER_SCHEMA,
     )
-    return scatter_for_kernel(df.select("doc_id", text_col)).mapInPandas(kernel, schema)
 
 
 DHASH_SCHEMA = T.StructType(
@@ -114,36 +195,20 @@ DHASH_SCHEMA = T.StructType(
 
 
 def image_dhash(df: DataFrame) -> DataFrame:
-    """Per-image 64-bit difference hash (signed int64) via
-    ``mapInPandas`` over netpbm payloads — the perceptual fingerprint
-    that makes image near-dedup a 2-ints-per-image relational problem
-    instead of a pixel problem. Undecodable payloads hash to NULL
-    (dropped by the downstream pair join, never a stage failure).
+    """Per-image 64-bit difference hash (signed int64) over netpbm
+    payloads — the perceptual fingerprint that makes image near-dedup
+    a 2-ints-per-image relational problem instead of a pixel problem.
+    Undecodable payloads hash to NULL, which the downstream pair join
+    drops.
 
     Scale: zero shuffle here; the corpus-scale work downstream
     (:func:`image_near_dup_pairs`) shuffles only (doc_id, dhash)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import imagecodec as ic
-
-        def one(payload: bytes) -> int | None:
-            try:
-                arr, _fmt = ic.decode_netpbm(bytes(payload))
-                return ic.dhash64(arr)
-            except Exception:
-                return None
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "dhash": pd.array(
-                        [one(p) for p in pdf["payload"]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(kernel, DHASH_SCHEMA)
+    return _map_rows(
+        df,
+        "payload",
+        lambda payload: (ic.dhash64(ic.decode_netpbm(payload)[0]),),
+        DHASH_SCHEMA,
+    )
 
 
 def band_subset_rows(
@@ -486,31 +551,15 @@ def attach_wav_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     -> stats -> fingerprint path runs for real; content-addressed, so
     the pinned oracle map in ``functions/audio_lens.py`` stays valid
     at every SF and under key-shifted stress corpora."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import audiocodec as ac
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        ac.render_tone_audio(t) for t in pdf[text_col]
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
+    return _map_rows(
+        scatter_small_scan(df.select("doc_id", text_col)),
+        text_col,
+        lambda text: (ac.render_tone_audio(text),),
+        RENDER_SCHEMA,
     )
-    return scatter_for_kernel(df.select("doc_id", text_col)).mapInPandas(kernel, schema)
 
 
-#: Output of :func:`decode_audio` — exact-integer per-clip stats;
-#: failures are a COLUMN (module rule).
+#: Output of :func:`decode_audio` — exact-integer per-clip stats.
 AUDIO_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -525,55 +574,24 @@ AUDIO_SCHEMA = T.StructType(
 
 
 def decode_audio(df: DataFrame) -> DataFrame:
-    """Audio decode via ``mapInPandas``: RIFF/PCM16 payloads parse
-    with the pure-python :mod:`audiocodec` (un-skipped in this
-    codec-less container — the audio counterpart of the r13 netpbm
-    tier); stats come from exact integer sums with floats spent only
-    on the final division, which is what lets ``audio_decode_stats``
-    carry an exact DuckDB oracle. Non-WAV/compressed payloads record
-    a ``decode_error`` naming the missing codec path."""
+    """Audio decode: RIFF/PCM16 payloads parse with the pure-python
+    :mod:`audiocodec` (un-skipped in this codec-less container — the
+    audio counterpart of the r13 netpbm tier); stats come from exact
+    integer sums with floats spent only on the final division, which
+    is what lets ``audio_decode_stats`` carry an exact DuckDB oracle.
+    Non-WAV/compressed payloads record a ``decode_error`` naming the
+    missing codec path."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import audiocodec as ac
+    def decode(payload: bytes) -> tuple:
+        st = ac.audio_sample_stats(payload)
+        n, s, ss = st["n_samples"], st["s_sum"], st["s_sumsq"]
+        if n == 0:
+            # a structurally-valid WAV with an empty data chunk has no
+            # defined mean/RMS
+            raise ValueError("empty data chunk (0 samples)")
+        return n, st["rate"], st["duration_us"], s / n, (ss / n) ** 0.5
 
-        def one(doc_id: int, payload: bytes) -> dict:
-            out = {
-                "doc_id": doc_id,
-                "n_samples": None,
-                "rate": None,
-                "duration_us": None,
-                "amp_mean": None,
-                "amp_rms": None,
-                "decode_error": None,
-            }
-            try:
-                st = ac.audio_sample_stats(bytes(payload))
-                n, s, ss = st["n_samples"], st["s_sum"], st["s_sumsq"]
-                if n == 0:
-                    # a structurally-valid WAV with an empty data chunk
-                    # has no defined mean/RMS; raising BEFORE any field
-                    # is assigned keeps the error-row contract (all
-                    # stats NULL + decode_error), matching decode_image
-                    raise ValueError("empty data chunk (0 samples)")
-                # derive every stat into locals first so a failure in
-                # any derivation can never emit a half-filled row
-                mean, rms = s / n, (ss / n) ** 0.5
-                out["n_samples"] = n
-                out["rate"] = st["rate"]
-                out["duration_us"] = st["duration_us"]
-                out["amp_mean"] = mean
-                out["amp_rms"] = rms
-            except Exception as exc:  # corrupt/unsupported payloads
-                out["decode_error"] = f"{type(exc).__name__}: {exc}"[:200]
-            return out
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [one(i, p) for i, p in zip(pdf["doc_id"], pdf["payload"])],
-                columns=[f.name for f in AUDIO_SCHEMA.fields],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(kernel, AUDIO_SCHEMA)
+    return _map_rows(df, "payload", decode, AUDIO_SCHEMA)
 
 
 FINGERPRINT_SCHEMA = T.StructType(
@@ -586,59 +604,15 @@ FINGERPRINT_SCHEMA = T.StructType(
 
 def audio_fingerprints(df: DataFrame) -> DataFrame:
     """Per-clip 64-bit energy-difference fingerprint (Haitsma-Kalker
-    shape, signed int64) via ``mapInPandas`` — the perceptual
-    signature that makes audio near-dedup a 2-ints-per-clip
-    relational problem. Undecodable payloads fingerprint to NULL."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import audiocodec as ac
-
-        def one(payload: bytes) -> int | None:
-            try:
-                return ac.audio_fingerprint64(bytes(payload))
-            except Exception:
-                return None
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "fingerprint": pd.array(
-                        [one(p) for p in pdf["payload"]], dtype="Int64"
-                    ),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        kernel, FINGERPRINT_SCHEMA
+    shape, signed int64) — the perceptual signature that makes audio
+    near-dedup a 2-ints-per-clip relational problem. Undecodable
+    payloads fingerprint to NULL."""
+    return _map_rows(
+        df,
+        "payload",
+        lambda payload: (ac.audio_fingerprint64(payload),),
+        FINGERPRINT_SCHEMA,
     )
-
-
-def scatter_for_kernel(df: DataFrame) -> DataFrame:
-    """Scatter an under-parallel scan before an expensive, EXPANDING
-    Python kernel: a 0.6 MB parquet of 5k document texts is one input
-    split, but the render/decode kernels expand it ~100x (5k AVI
-    payloads = 62 MB of pixels) and cost CPU per row — left alone,
-    the whole Arrow stage runs on ONE core while 31 idle.
-
-    Rule: repartition round-robin to ``defaultParallelism`` ONLY when
-    the planned split count is below it. The exchange moves just
-    (doc_id, text) — trivially small exactly when the rule fires —
-    and at 100 TB, where inputs already arrive in thousands of
-    splits, the condition is false and this is a no-op (never an
-    extra corpus-wide shuffle). This is the standard dense-source /
-    expensive-kernel scatter a real cluster job does by sizing
-    ``spark.sql.files.maxPartitionBytes`` down; doing it by row count
-    keeps the catalog correct at every SF without global conf
-    fiddling. (Shared engine-wide as
-    :func:`~hadoop_data_pipeline_spark.operators.queries.scatter_small_scan`
-    — r16 generalized this rule to every expensive-projection family:
-    dedup staging, ANN scoring, text staging, graph edge derivation.)"""
-    from hadoop_data_pipeline_spark.operators.queries import (
-        scatter_small_scan,
-    )
-
-    return scatter_small_scan(df)
 
 
 def attach_avi_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -652,31 +626,15 @@ def attach_avi_payload(df: DataFrame, text_col: str = "text") -> DataFrame:
     per-frame-dHash path runs for real; content-addressed, so the
     pinned oracle map in ``functions/video_lens.py`` stays valid at
     every SF and under key-shifted stress corpora."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import videocodec as vc
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": [
-                        vc.render_scene_video(t) for t in pdf[text_col]
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType(), False),
-            T.StructField("payload", T.BinaryType(), False),
-        ]
+    return _map_rows(
+        scatter_small_scan(df.select("doc_id", text_col)),
+        text_col,
+        lambda text: (vc.render_scene_video(text),),
+        RENDER_SCHEMA,
     )
-    return scatter_for_kernel(df.select("doc_id", text_col)).mapInPandas(kernel, schema)
 
 
-#: Output of :func:`decode_video` — exact-integer per-video stats;
-#: failures are a COLUMN (module rule).
+#: Output of :func:`decode_video` — exact-integer per-video stats.
 VIDEO_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -693,63 +651,33 @@ VIDEO_SCHEMA = T.StructType(
 
 
 def decode_video(df: DataFrame) -> DataFrame:
-    """Video decode via ``mapInPandas``: uncompressed AVI payloads
-    parse with the pure-python :mod:`videocodec` RIFF walk (the
-    netpbm/WAV precedent completing the codec triad); stats come from
-    exact integer pixel sums across all frames with floats spent only
-    on the final division, which is what lets ``video_decode_stats``
-    carry an exact DuckDB oracle. Compressed/foreign containers
-    record a ``decode_error`` naming the missing codec path. Stats
-    derive into locals before any field is assigned, so an error row
-    is ALWAYS all-NULL stats + decode_error (the r13 ADVICE contract,
-    shared with :func:`decode_audio`)."""
+    """Video decode: uncompressed AVI payloads parse with the
+    pure-python :mod:`videocodec` RIFF walk (the netpbm/WAV precedent
+    completing the codec triad); stats come from exact integer pixel
+    sums across all frames with floats spent only on the final
+    division, which is what lets ``video_decode_stats`` carry an exact
+    DuckDB oracle. Compressed/foreign containers record a
+    ``decode_error`` naming the missing codec path."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import videocodec as vc
+    def decode(payload: bytes) -> tuple:
+        st = vc.video_frame_stats(payload)
+        n_px = 3 * st["n_frames"] * st["width"] * st["height"]
+        s, ss = st["px_sum"], st["px_sumsq"]
+        return (
+            st["n_frames"],
+            st["width"],
+            st["height"],
+            st["us_per_frame"],
+            st["duration_us"],
+            s / n_px,
+            ((ss * n_px - s * s) / (n_px * n_px)) ** 0.5,
+        )
 
-        def one(doc_id: int, payload: bytes) -> dict:
-            out = {
-                "doc_id": doc_id,
-                "n_frames": None,
-                "width": None,
-                "height": None,
-                "us_per_frame": None,
-                "duration_us": None,
-                "pixel_mean": None,
-                "pixel_std": None,
-                "decode_error": None,
-            }
-            try:
-                st = vc.video_frame_stats(bytes(payload))
-                n_px = 3 * st["n_frames"] * st["width"] * st["height"]
-                s, ss = st["px_sum"], st["px_sumsq"]
-                mean = s / n_px
-                std = ((ss * n_px - s * s) / (n_px * n_px)) ** 0.5
-                out.update(
-                    n_frames=st["n_frames"],
-                    width=st["width"],
-                    height=st["height"],
-                    us_per_frame=st["us_per_frame"],
-                    duration_us=st["duration_us"],
-                    pixel_mean=mean,
-                    pixel_std=std,
-                )
-            except Exception as exc:  # corrupt/unsupported payloads
-                out["decode_error"] = f"{type(exc).__name__}: {exc}"[:200]
-            return out
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [one(i, p) for i, p in zip(pdf["doc_id"], pdf["payload"])],
-                columns=[f.name for f in VIDEO_SCHEMA.fields],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(kernel, VIDEO_SCHEMA)
+    return _map_rows(df, "payload", decode, VIDEO_SCHEMA)
 
 
 #: Output of :func:`decimate_audio` / :func:`decimate_video` — the
-#: transformed payload's identity (md5 + shape constants); failures
-#: are a COLUMN (module rule), with the atomic all-NULL contract.
+#: transformed payload's identity (md5 + shape constants).
 DECIMATE_AUDIO_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -762,42 +690,19 @@ DECIMATE_AUDIO_SCHEMA = T.StructType(
 
 
 def decimate_audio(df: DataFrame, factor: int = 4) -> DataFrame:
-    """Audio decimation via ``mapInPandas``: keep every ``factor``-th
-    sample, re-encode at ``rate // factor``
-    (:func:`audiocodec.decimate_wav`) — the bandwidth-reduction step a
-    training pipeline runs BEFORE payloads reach a shard writer
-    (output bytes shrink ~``factor``-fold, so run this ahead of any
-    payload shuffle; the audio twin of :func:`resize_image`). Error
-    rows are all-NULL stats + ``decimate_error``."""
+    """Audio decimation: keep every ``factor``-th sample, re-encode at
+    ``rate // factor`` (:func:`audiocodec.decimate_wav`) — the
+    bandwidth-reduction step a training pipeline runs BEFORE payloads
+    reach a shard writer (output bytes shrink ~``factor``-fold, so run
+    this ahead of any payload shuffle; the audio twin of
+    :func:`resize_image`)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import audiocodec as ac
+    def decimate(payload: bytes) -> tuple:
+        dec, n = ac.decimate_wav(payload, factor)
+        _samples, rate = ac.decode_wav(dec)
+        return n, rate, dec
 
-        def one(doc_id: int, payload: bytes) -> dict:
-            out = {
-                "doc_id": doc_id,
-                "n_samples": None,
-                "rate": None,
-                "payload": None,
-                "decimate_error": None,
-            }
-            try:
-                dec, n = ac.decimate_wav(bytes(payload), factor)
-                _samples, rate = ac.decode_wav(dec)
-                out.update(n_samples=n, rate=rate, payload=dec)
-            except Exception as exc:  # corrupt/unsupported payloads
-                out["decimate_error"] = f"{type(exc).__name__}: {exc}"[:200]
-            return out
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [one(i, p) for i, p in zip(pdf["doc_id"], pdf["payload"])],
-                columns=[f.name for f in DECIMATE_AUDIO_SCHEMA.fields],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        kernel, DECIMATE_AUDIO_SCHEMA
-    )
+    return _map_rows(df, "payload", decimate, DECIMATE_AUDIO_SCHEMA)
 
 
 DECIMATE_VIDEO_SCHEMA = T.StructType(
@@ -812,41 +717,18 @@ DECIMATE_VIDEO_SCHEMA = T.StructType(
 
 
 def decimate_video(df: DataFrame, keep_every: int = 2) -> DataFrame:
-    """Video frame-rate decimation via ``mapInPandas``: keep every
-    ``keep_every``-th frame, duration-preserving re-encode
+    """Video frame-rate decimation: keep every ``keep_every``-th
+    frame, duration-preserving re-encode
     (:func:`videocodec.decimate_avi`) — the video tier's transform
     stage (decode / TRANSFORM / signature / near-dup now mirrors the
-    image tier's decode / resize / dHash / near-dup). Error rows are
-    all-NULL stats + ``decimate_error``."""
+    image tier's decode / resize / dHash / near-dup)."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import videocodec as vc
+    def decimate(payload: bytes) -> tuple:
+        dec, n = vc.decimate_avi(payload, keep_every)
+        _frames, us = vc.decode_avi(dec)
+        return n, us, dec
 
-        def one(doc_id: int, payload: bytes) -> dict:
-            out = {
-                "doc_id": doc_id,
-                "n_frames": None,
-                "us_per_frame": None,
-                "payload": None,
-                "decimate_error": None,
-            }
-            try:
-                dec, n = vc.decimate_avi(bytes(payload), keep_every)
-                _frames, us = vc.decode_avi(dec)
-                out.update(n_frames=n, us_per_frame=us, payload=dec)
-            except Exception as exc:  # corrupt/unsupported payloads
-                out["decimate_error"] = f"{type(exc).__name__}: {exc}"[:200]
-            return out
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [one(i, p) for i, p in zip(pdf["doc_id"], pdf["payload"])],
-                columns=[f.name for f in DECIMATE_VIDEO_SCHEMA.fields],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        kernel, DECIMATE_VIDEO_SCHEMA
-    )
+    return _map_rows(df, "payload", decimate, DECIMATE_VIDEO_SCHEMA)
 
 
 #: Output of :func:`video_frame_dhashes` — one row per decoded frame.
@@ -860,31 +742,17 @@ FRAME_DHASH_SCHEMA = T.StructType(
 
 
 def video_frame_dhashes(df: DataFrame) -> DataFrame:
-    """Per-frame 64-bit difference hashes via ``mapInPandas`` — the
-    video-to-frames explode that turns shared-scene detection into a
-    (frame_idx, 2 ints)-per-frame relational problem. Undecodable
-    payloads contribute NO rows (dropped, never a stage failure —
-    downstream pair counts treat them as scene-less)."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import videocodec as vc
-
-        for pdf in batches:
-            out: list[tuple[int, int, int]] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                try:
-                    hashes = vc.frame_dhashes(bytes(payload))
-                except Exception:
-                    continue
-                out.extend(
-                    (int(doc_id), k, h) for k, h in enumerate(hashes)
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "dhash"]
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        kernel, FRAME_DHASH_SCHEMA
+    """Per-frame 64-bit difference hashes — the video-to-frames
+    explode that turns shared-scene detection into a (frame_idx, 2
+    ints)-per-frame relational problem. Undecodable payloads
+    contribute no rows, so downstream pair counts treat them as
+    scene-less."""
+    return _map_rows(
+        df,
+        "payload",
+        lambda payload: enumerate(vc.frame_dhashes(payload)),
+        FRAME_DHASH_SCHEMA,
+        explode=True,
     )
 
 
@@ -902,23 +770,12 @@ def video_frame_dhashes_from_text(
     first touches the bytes, not materialize pixels through an extra
     exchange-free-but-serialized stage. Measured at sf0.1 the fusion
     roughly halves the two signature entries' wall time."""
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from hadoop_data_pipeline_spark.operators import videocodec as vc
-
-        for pdf in batches:
-            out: list[tuple[int, int, int]] = []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                hashes = vc.frame_dhashes(vc.render_scene_video(text))
-                out.extend(
-                    (int(doc_id), k, h) for k, h in enumerate(hashes)
-                )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "dhash"]
-            )
-
-    return scatter_for_kernel(df.select("doc_id", text_col)).mapInPandas(
-        kernel, FRAME_DHASH_SCHEMA
+    return _map_rows(
+        scatter_small_scan(df.select("doc_id", text_col)),
+        text_col,
+        lambda text: enumerate(vc.frame_dhashes(vc.render_scene_video(text))),
+        FRAME_DHASH_SCHEMA,
+        explode=True,
     )
 
 
@@ -982,9 +839,7 @@ def video_scene_near_dup_pairs(
     )
 
 
-#: Output of :func:`decode_image`. ``decode_error`` is a column, not an
-#: exception: at corpus scale corrupt images are routine, and one bad
-#: byte-string must not kill a 1000-executor stage.
+#: Output of :func:`decode_image`.
 DECODE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -999,9 +854,21 @@ DECODE_SCHEMA = T.StructType(
 )
 
 
+def _pil_image():
+    """PIL's ``Image`` module: the codec tier for non-netpbm images."""
+    try:
+        from PIL import Image
+    except ImportError:
+        raise NotImplementedError(
+            "non-netpbm format requires PIL/pillow, which is not in this "
+            "container"
+        ) from None
+    return Image
+
+
 def decode_image(df: DataFrame) -> DataFrame:
-    """Image decode via ``mapInPandas``: each binary payload becomes
-    (width, height, mode, format, pixel mean/std).
+    """Image decode: each binary payload becomes (width, height, mode,
+    format, pixel mean/std).
 
     Two codec tiers, chosen PER IMAGE by sniffing the payload:
 
@@ -1013,77 +880,41 @@ def decode_image(df: DataFrame) -> DataFrame:
       what lets ``image_decode_stats`` carry an exact DuckDB oracle.
     * every other format falls back to PIL when importable; when PIL
       is absent the row records a ``decode_error`` naming the missing
-      codec — a column, never an exception, because one undecodable
-      payload must not kill a 1000-executor stage.
-
-    Scale shape matches :func:`extract_features`: Arrow batches in,
-    zero shuffle.
+      codec.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
-
-        import numpy as np
-
-        from hadoop_data_pipeline_spark.operators import imagecodec as ic
-
-        try:
-            from PIL import Image
-        except ImportError:
-            Image = None  # noqa: N806 - per-image fallback gate
-
-        def one(doc_id: int, payload: bytes) -> dict:
-            out = {
-                "doc_id": doc_id,
-                "width": None,
-                "height": None,
-                "mode": None,
-                "format": None,
-                "pixel_mean": None,
-                "pixel_std": None,
-                "decode_error": None,
-            }
-            try:
-                raw = bytes(payload)
-                if raw[:2] in (b"P5", b"P6"):
-                    st = ic.image_pixel_stats(raw)
-                    out["width"], out["height"] = st["width"], st["height"]
-                    out["mode"], out["format"] = st["mode"], st["format"]
-                    n, s, ss = st["n_px"], st["px_sum"], st["px_sumsq"]
-                    out["pixel_mean"] = s / n
-                    out["pixel_std"] = ((ss * n - s * s) / (n * n)) ** 0.5
-                elif Image is None:
-                    out["decode_error"] = (
-                        "NotImplementedError: non-netpbm format requires "
-                        "PIL/pillow, which is not in this container"
-                    )
-                else:
-                    with Image.open(io.BytesIO(raw)) as img:
-                        out["format"] = img.format
-                        img.load()
-                        arr = np.asarray(img, dtype=np.float64)
-                        out["width"], out["height"] = img.size
-                        out["mode"] = img.mode
-                        out["pixel_mean"] = round(float(arr.mean()), 6)
-                        out["pixel_std"] = round(float(arr.std()), 6)
-            except Exception as exc:  # corrupt/unsupported payloads
-                out["decode_error"] = f"{type(exc).__name__}: {exc}"[:200]
-            return out
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [one(i, p) for i, p in zip(pdf["doc_id"], pdf["payload"])],
-                columns=[f.name for f in DECODE_SCHEMA.fields],
+    def decode(raw: bytes) -> tuple:
+        if raw[:2] in (b"P5", b"P6"):
+            st = ic.image_pixel_stats(raw)
+            n, s, ss = st["n_px"], st["px_sum"], st["px_sumsq"]
+            return (
+                st["width"],
+                st["height"],
+                st["mode"],
+                st["format"],
+                s / n,
+                ((ss * n - s * s) / (n * n)) ** 0.5,
+            )
+        with _pil_image().open(io.BytesIO(raw)) as img:
+            fmt = img.format
+            img.load()
+            arr = np.asarray(img, dtype=np.float64)
+            return (
+                *img.size,
+                img.mode,
+                fmt,
+                round(float(arr.mean()), 6),
+                round(float(arr.std()), 6),
             )
 
-    return df.select("doc_id", "payload").mapInPandas(kernel, DECODE_SCHEMA)
+    return _map_rows(df, "payload", decode, DECODE_SCHEMA)
 
 
 def extract_features(df: DataFrame) -> DataFrame:
-    """DETERMINISTIC FAKE feature extraction over binary payloads via
-    ``mapInPandas``: byte-level mean/std + md5 of the first 16 bytes,
-    standing in for pixel statistics. Exercises the real distributed
-    path: Arrow batches in, bounded batches out, zero shuffle.
+    """DETERMINISTIC FAKE feature extraction over binary payloads:
+    byte-level mean/std + md5 of the first 16 bytes, standing in for
+    pixel statistics. Exercises the real distributed path: Arrow
+    batches in, bounded batches out, zero shuffle.
 
     The stats are computed from EXACT integer byte sums (S, SS) and
     only then divided — so ``mean = S/n`` and ``std = sqrt((SS*n -
@@ -1098,38 +929,16 @@ def extract_features(df: DataFrame) -> DataFrame:
     float check: keep accumulation in integers, spend floats only on
     the final arithmetic, and never round in-engine."""
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def features(payload: bytes) -> tuple:
+        n = len(payload)
+        head = hashlib.md5(payload[:16]).hexdigest()
+        if not n:
+            return 0, None, None, head
+        arr = np.frombuffer(payload, dtype=np.uint8).astype(np.int64)
+        s, ss = int(arr.sum()), int((arr * arr).sum())
+        return n, s / n, ((ss * n - s * s) / (n * n)) ** 0.5, head
 
-        import numpy as np
-
-        def stats(b: bytes) -> tuple[float | None, float | None]:
-            n = len(b)
-            if not n:
-                return None, None
-            arr = np.frombuffer(bytes(b), dtype=np.uint8).astype(np.int64)
-            s = int(arr.sum())
-            ss = int((arr * arr).sum())
-            mean = s / n
-            var = (ss * n - s * s) / (n * n)
-            return mean, var**0.5
-
-        for pdf in batches:
-            payloads = pdf["payload"]
-            pairs = [stats(b) for b in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "byte_mean": [p[0] for p in pairs],
-                    "byte_std": [p[1] for p in pairs],
-                    "head_hash": payloads.map(
-                        lambda b: hashlib.md5(bytes(b[:16])).hexdigest()
-                    ),
-                }
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(kernel, FEATURE_SCHEMA)
+    return _map_rows(df, "payload", features, FEATURE_SCHEMA)
 
 
 GAP_STATS_SCHEMA = T.StructType(
@@ -1174,29 +983,6 @@ def user_gap_stats(events: DataFrame) -> DataFrame:
     )
 
 
-def frame_sample(df: DataFrame, every_n_bytes: int = 64) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled "frame"
-    (byte offset) per payload — the explode shape a video pipeline
-    uses (video -> frames). Deterministic: offsets are a sequence.
-
-    Since r14 the REAL video path is :func:`video_frame_dhashes` over
-    :mod:`videocodec`'s AVI parser; this byte-offset sampler remains
-    the opaque-payload fallback for containers without a pure-python
-    parser."""
-    return df.select(
-        "doc_id",
-        F.posexplode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(
-                    (F.octet_length("payload") - F.lit(1)), F.lit(0)
-                ),
-                F.lit(every_n_bytes),
-            )
-        ).alias("frame_idx", "byte_offset"),
-    )
-
-
 #: Output of :func:`frame_digests` — one row per *sampled* frame with
 #: its content digest.
 FRAME_DIGEST_SCHEMA = T.StructType(
@@ -1211,19 +997,15 @@ FRAME_DIGEST_SCHEMA = T.StructType(
 def frame_digests(
     df: DataFrame, frame_bytes: int = 16, stride_frames: int = 4
 ) -> DataFrame:
-    """Frame-sampling with CONTENT extraction via ``mapInPandas``: the
-    payload is cut into fixed-size ``frame_bytes`` frames (partial tail
-    frame dropped, as a fixed-frame video decoder would) and every
-    ``stride_frames``-th frame is digested — the "sample 1 frame per
-    second of video" shape of a multimodal training pipeline, with an
-    md5 digest standing in for the decoded frame tensor.
-
-    Complements :func:`frame_sample` (JVM-side offsets only): this
-    kernel actually touches the bytes, so it demonstrates the
-    Arrow-batched slow path done right — one pass over each payload,
-    rows out ≤ rows in × frames, no shuffle anywhere (pure map-side
-    explode). At 100 TB the same kernel runs per input split; sampled
-    frames go straight to the sink with no exchange.
+    """Frame-sampling with CONTENT extraction: the payload is cut into
+    fixed-size ``frame_bytes`` frames (partial tail frame dropped, as
+    a fixed-frame video decoder would) and every ``stride_frames``-th
+    frame is digested — the "sample 1 frame per second of video" shape
+    of a multimodal training pipeline, with an md5 digest standing in
+    for the decoded frame tensor. One pass over each payload, rows out
+    ≤ rows in × frames, no shuffle anywhere (pure map-side explode).
+    At 100 TB the same kernel runs per input split; sampled frames go
+    straight to the sink with no exchange.
 
     Since r14 the REAL video path — container parse, frame raster
     decode, per-frame perceptual hash — is :func:`decode_video` /
@@ -1232,32 +1014,18 @@ def frame_digests(
     payloads without a pure-python container parser.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
+    def frames(raw: bytes) -> Iterator[tuple[int, str]]:
+        for i in range(0, len(raw) // frame_bytes, stride_frames):
+            frame = raw[i * frame_bytes : (i + 1) * frame_bytes]
+            yield i, hashlib.md5(frame).hexdigest()
 
-        for pdf in batches:
-            out: list[tuple[int, int, str]] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                if payload is None:  # corrupt/missing payloads skip,
-                    continue  # never kill the stage (module rule)
-                raw = bytes(payload)
-                n_frames = len(raw) // frame_bytes
-                for i in range(0, n_frames, stride_frames):
-                    frame = raw[i * frame_bytes : (i + 1) * frame_bytes]
-                    out.append(
-                        (int(doc_id), i, hashlib.md5(frame).hexdigest())
-                    )
-            yield pd.DataFrame(
-                out, columns=["doc_id", "frame_idx", "frame_md5"]
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(
-        kernel, FRAME_DIGEST_SCHEMA
+    return _map_rows(
+        df, "payload", frames, FRAME_DIGEST_SCHEMA, explode=True
     )
 
 
 #: Output of :func:`resize_image` — resized payload plus the new
-#: dimensions; per-image failures land in ``resize_error``.
+#: dimensions.
 RESIZE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType(), False),
@@ -1272,10 +1040,9 @@ RESIZE_SCHEMA = T.StructType(
 def resize_image(
     df: DataFrame, max_side: int = 256, out_format: str = "PNG"
 ) -> DataFrame:
-    """Image resize via ``mapInPandas``: decode, downscale so the
-    longer edge is at most ``max_side`` (aspect preserved, never
-    upscaled), re-encode. The standard pre-training normalization
-    step for image corpora.
+    """Image resize: decode, downscale so the longer edge is at most
+    ``max_side`` (aspect preserved, never upscaled), re-encode. The
+    standard pre-training normalization step for image corpora.
 
     Same two-tier codec selection as :func:`decode_image`: netpbm
     payloads resize with the pure-python exact-integer box downsample
@@ -1285,57 +1052,19 @@ def resize_image(
     a ``resize_error`` when PIL is absent.
 
     Scale shape: Arrow batches in, zero shuffle, payload never enters
-    a groupBy; failures are a COLUMN (``resize_error``), not an
-    exception — one corrupt image must not kill a 1000-executor stage.
-    Output payload is the resized encoding, so downstream bytes
-    shrink by ~(orig/max_side)^2 — run this BEFORE any stage that
-    shuffles payloads to a training-shard writer.
+    a groupBy. Output payload is the resized encoding, so downstream
+    bytes shrink by ~(orig/max_side)^2 — run this BEFORE any stage
+    that shuffles payloads to a training-shard writer.
     """
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io
+    def resize(raw: bytes) -> tuple:
+        if raw[:2] in (b"P5", b"P6"):
+            return ic.resize_netpbm(raw, max_side)
+        with _pil_image().open(io.BytesIO(raw)) as img:
+            img.load()
+            img.thumbnail((max_side, max_side))
+            buf = io.BytesIO()
+            img.save(buf, format=out_format)
+            return (buf.getvalue(), *img.size)
 
-        from hadoop_data_pipeline_spark.operators import imagecodec as ic
-
-        try:
-            from PIL import Image
-        except ImportError:
-            Image = None  # noqa: N806 - per-image fallback gate
-
-        def one(doc_id: int, payload: bytes) -> dict:
-            out = {
-                "doc_id": doc_id,
-                "payload": None,
-                "width": None,
-                "height": None,
-                "resize_error": None,
-            }
-            try:
-                raw = bytes(payload)
-                if raw[:2] in (b"P5", b"P6"):
-                    rz, w, h = ic.resize_netpbm(raw, max_side)
-                    out["payload"], out["width"], out["height"] = rz, w, h
-                elif Image is None:
-                    out["resize_error"] = (
-                        "NotImplementedError: non-netpbm format requires "
-                        "PIL/pillow, which is not in this container"
-                    )
-                else:
-                    with Image.open(io.BytesIO(raw)) as img:
-                        img.load()
-                        img.thumbnail((max_side, max_side))
-                        buf = io.BytesIO()
-                        img.save(buf, format=out_format)
-                        out["payload"] = buf.getvalue()
-                        out["width"], out["height"] = img.size
-            except Exception as exc:  # corrupt/unsupported payloads
-                out["resize_error"] = f"{type(exc).__name__}: {exc}"[:200]
-            return out
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                [one(i, p) for i, p in zip(pdf["doc_id"], pdf["payload"])],
-                columns=[f.name for f in RESIZE_SCHEMA.fields],
-            )
-
-    return df.select("doc_id", "payload").mapInPandas(kernel, RESIZE_SCHEMA)
+    return _map_rows(df, "payload", resize, RESIZE_SCHEMA)

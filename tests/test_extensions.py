@@ -175,14 +175,6 @@ def test_multimodal_decode_with_codec(spark, docs):
     assert bad.decode_error is not None and bad.width is None
 
 
-def test_frame_sample_shape(docs):
-    payloads = mm.attach_fake_payload(docs)
-    frames = mm.frame_sample(payloads, every_n_bytes=16)
-    one = frames.where("doc_id = 1").orderBy("frame_idx").collect()
-    assert [r.byte_offset for r in one] == [0, 16, 32]
-    assert [r.frame_idx for r in one] == [0, 1, 2]
-
-
 @pytest.mark.parametrize("edge_limit", [2_000_000, 0])
 def test_connected_components_hand_graph(spark, edge_limit):
     # Components: {1,2,3,9}, {4,5}, {6} isolated, {7,8}. edge_limit=0

@@ -559,11 +559,14 @@ def test_scatter_scan_shape_gate(spark):
     )
     rep = scan.repartition(4)
     mem = spark.createDataFrame([(1,)], "x int")
+    coalesced = spark.range(100).coalesce(1)
     # a persisted scan reads back with the partitioning it was cached
     # with, and so does a row-local op over it
     cached = load_table(spark, sf, "supplier").persist()
     try:
-        for f in (agg, joined, rep, mem, cached, cached.select("s_name")):
+        for f in (
+            agg, joined, rep, mem, coalesced, cached, cached.select("s_name")
+        ):
             assert not Q._is_scan_shaped(f)
             assert Q.scatter_small_scan(f) is f
     finally:

@@ -303,26 +303,6 @@ def test_pinned_video_lens_artifact_fresh():
         assert lens_row(texts[k]) == VIDEO_LENS[k]
 
 
-def test_scatter_for_kernel_rule(spark):
-    # under-parallel single-split SCAN scatters to defaultParallelism;
-    # frames whose partitioning was set by an exchange (repartition,
-    # range+coalesce — anything non-scan-shaped) pass through with
-    # their partitioning intact (r17 scan-shape gate: split packing
-    # never decided their partition count, so there is nothing for
-    # the scatter to fix and no probe to pay).
-    from hadoop_data_pipeline_spark.sources.readers import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
-        "doc_id", "text"
-    )
-    target = spark.sparkContext.defaultParallelism
-    assert docs.rdd.getNumPartitions() < target  # one split
-    assert mm.scatter_for_kernel(docs).rdd.getNumPartitions() == target
-    synth = spark.range(100).selectExpr("id AS doc_id", "'t' AS text")
-    for f in (synth.coalesce(1), synth.repartition(target * 2)):
-        assert mm.scatter_for_kernel(f) is f
-
-
 def test_decimate_avi_keeps_strided_frames_and_duration():
     rng = np.random.default_rng(11)
     f = rng.integers(0, 256, (4, 6, 6, 3), dtype=np.uint8)
